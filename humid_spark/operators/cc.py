@@ -1,13 +1,19 @@
-"""Distributed connected components (G1) — large-star / small-star.
+"""Distributed connected components (G1) — star contraction, driver finish.
 
 Reference: recursive C-stack flood fill (src/cluster.cc:58-80), which
 overflows on huge clusters (docs/troubleshooting.rst:6-18).  We replace it
 with the alternating large-star/small-star algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", public literature):
-O(log n) rounds, each round two shuffles, converging to star graphs whose
-root is the component minimum.  Every round runs `localCheckpoint` to cut
-the growing lineage (the reference's stack depth problem re-expressed —
-and solved — in Spark terms).
+"Connected Components in MapReduce and Beyond", public literature), run
+the way that paper recommends: contract the graph in distributed rounds
+only until it fits one machine, then finish there.  Each star round is two
+shuffles plus an eager `localCheckpoint` (which cuts the growing lineage —
+the reference's stack depth problem re-expressed in Spark terms), so it
+costs 4-5 Spark jobs however small the graph is.  Once a checkpointed edge
+set holds at most `DRIVER_EDGE_BUDGET` edges it is collected over Arrow
+and labelled by a vectorised numpy union-find (`_min_labels`: hook roots
+onto smaller labels, then pointer jumping) — the union-find primitive BTS
+("Load-Balanced Distributed Union-Find", ICDE 2024) argues for.  A graph
+that starts under the budget runs no star round at all.
 
 Works over any orderable node type (string keys in parity mode, long doc
 ids in the web-scale LSH path).
@@ -15,8 +21,15 @@ ids in the web-scale LSH path).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# Largest edge set labelled on the driver: 32 MB of int64 (src, dst)
+# pairs, i.e. 2M edges.  Above it, star rounds contract the graph first.
+DRIVER_EDGE_BUDGET = (32 << 20) // 16
 
 
 class CheckpointHandle:
@@ -99,6 +112,53 @@ def _observed_checkpoint(df: DataFrame):
     return chk, (int(got["n"]), int(got["h"]))
 
 
+def _min_labels(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Union-find over vertices 0..n-1 joined by edges (u[i], v[i]).
+
+    Returns lab with lab[x] = the smallest vertex of x's component.  Each
+    round hooks the larger label of every edge whose endpoints still
+    disagree onto the smaller one, then pointer-jumps until every vertex
+    points at a root, and keeps only the edges between distinct roots.
+    lab[x] <= x holds throughout, so the root of a component is its
+    minimum."""
+    lab = np.arange(n)
+    while True:
+        lu, lv = lab[u], lab[v]
+        live = lu != lv
+        if not live.any():
+            return lab
+        u, v = lu[live], lv[live]
+        np.minimum.at(lab, np.maximum(u, v), np.minimum(u, v))
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+
+
+def _driver_finish(cur: DataFrame) -> DataFrame:
+    """Collect the checkpointed edge set `cur` over Arrow, label it with
+    `_min_labels` and return (node, component) in cur's column type,
+    eagerly localCheckpoint'ed.  Node order is numpy's sort order, which
+    for strings is code-point order — the order of Spark's UTF-8 bytes."""
+    pdf = cur.toPandas()
+    n_edges = len(pdf)
+    nodes, idx = np.unique(
+        np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]),
+        return_inverse=True,
+    )
+    lab = _min_labels(idx[:n_edges], idx[n_edges:], len(nodes))
+    f = cur.schema["src"]
+    schema = StructType([
+        StructField("node", f.dataType, f.nullable),
+        StructField("component", f.dataType, f.nullable),
+    ])
+    out = pd.DataFrame({"node": nodes, "component": nodes[lab]})
+    return cur.sparkSession.createDataFrame(out, schema).localCheckpoint(
+        eager=True
+    )
+
+
 def connected_components(
     edges: DataFrame, max_rounds: int = 50, track: list | None = None
 ) -> DataFrame:
@@ -108,23 +168,31 @@ def connected_components(
     component = min node id of its component.  Isolated nodes don't appear
     (callers left-join and default component := own id).
 
-    Storage discipline: each round's eager localCheckpoint SUPERSEDES the
-    previous round's — the old blocks are unpersisted as soon as the new
-    round is materialized, so a k-round run holds at most two rounds'
-    edge sets, not k (at web scale a round's edge set is the largest
-    resident structure after the signature table).  The FINAL round's
-    blocks back the returned DataFrame and must outlive it; with `track`,
-    a `CheckpointHandle` for them is appended for the caller to release
-    once downstream results are materialized.
+    The edge set is checkpointed once; while it holds more than
+    `DRIVER_EDGE_BUDGET` edges, large-star/small-star rounds contract it,
+    and as soon as a checkpoint's edge count (observed by the checkpoint
+    job itself) is at or under the budget, `_driver_finish` labels it on
+    the driver.  A graph too large for the driver that reaches the star
+    fixpoint is read off the stars instead.  Raises RuntimeError when
+    `max_rounds` star rounds pass without either.
+
+    Storage discipline: each eager localCheckpoint SUPERSEDES the
+    previous one — the old blocks are unpersisted as soon as the new one
+    is materialized, so a k-round run holds at most two edge sets, not k
+    (at web scale a round's edge set is the largest resident structure
+    after the signature table).  The FINAL checkpoint (the driver-labelled
+    result, or the last star round) backs the returned DataFrame and must
+    outlive it; with `track`, a `CheckpointHandle` for it is appended for
+    the caller to release once downstream results are materialized.
     """
     from pyspark.sql import Observation
 
     # No .distinct() here: every candidate generator in the engine already
     # emits once-per-pair edges, so the distinct was a pure extra exchange
     # of the (expensive, full-width) edge plan before the checkpoint, and
-    # duplicate edges from other callers are absorbed by round 1's min
-    # aggregations anyway (small-star's final distinct keeps the set the
-    # convergence fingerprint sees canonical).
+    # duplicate edges from other callers are absorbed by the driver finish
+    # or by round 1's min aggregations (small-star's final distinct keeps
+    # the set the convergence fingerprint sees canonical).
     obs0 = Observation()
     cur = (
         edges.select("src", "dst")
@@ -132,14 +200,11 @@ def connected_components(
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    if int(obs0.get["n"]) == 0:
+    n_edges = int(obs0.get["n"])
+    if n_edges == 0:
         # Edge-free graph (common in parity mode at the reference key
-        # length, where no Hamming-1 pairs exist): the star loop below
-        # would still run two full rounds (4-5 shuffles + an eager
-        # checkpoint action each) over empty frames just to observe the
-        # fingerprint fixpoint.  The result is known — no nodes appear.
-        # (The zero-row checkpoint blocks back the returned frame; with
-        # `track` the caller can release them like any final round's.)
+        # length, where no Hamming-1 pairs exist): no nodes appear, and
+        # the zero-row checkpoint backs the returned frame.
         if track is not None:
             track.append(CheckpointHandle(cur))
         return cur.select(
@@ -147,13 +212,9 @@ def connected_components(
         )
 
     # Per-round shuffle sizing is left to AQE: coalescePartitions plans the
-    # reduce side from runtime map-output stats, so a tiny edge set runs
+    # reduce side from runtime map-output stats, so a small edge set runs
     # each round's aggregations as 1-2 tasks while billions of edges keep
-    # the session's full width.  (An earlier version resized the
-    # session-global spark.sql.shuffle.partitions around the loop — not
-    # concurrency-safe when two queries share the session; removing it
-    # costs ~10% on local[32] microbenches (tiny graph 3.9s->4.7s, 1M-edge
-    # chains 16.1s->17.6s), within run variance and worth the safety.)
+    # the session's full width.
     # Exactly ONE large/small-star contraction per eager checkpoint: the
     # star operators reference their input from several branches (the
     # symmetrizing union, the min join), so chaining k rounds between
@@ -162,25 +223,37 @@ def connected_components(
     # on an identical 3k-edge graph.  The per-round checkpoint is load-
     # bearing for performance, not just lineage hygiene.
     prev_fp: tuple[int, int] | None = None
-    for _ in range(max_rounds):
+    rounds = 0
+    while n_edges > DRIVER_EDGE_BUDGET:
+        if rounds == max_rounds:
+            CheckpointHandle(cur).unpersist()
+            raise RuntimeError(
+                f"connected_components: no star fixpoint after {max_rounds}"
+                f" rounds ({n_edges} edges left, driver budget"
+                f" {DRIVER_EDGE_BUDGET})"
+            )
         nxt, fp = _observed_checkpoint(_small_star(_large_star(cur)))
         CheckpointHandle(cur).unpersist()  # superseded — nxt is materialized
-        cur = nxt
+        cur, n_edges, rounds = nxt, fp[0], rounds + 1
         if fp == prev_fp:
-            break
+            # Converged above the budget: edges are (member -> root)
+            # stars.  Roots map to themselves.
+            if track is not None:
+                track.append(CheckpointHandle(cur))
+            members = cur.select(
+                F.col("src").alias("node"), F.col("dst").alias("component")
+            )
+            roots = cur.select(F.col("dst").alias("node")).distinct()
+            return members.union(
+                roots.withColumn("component", F.col("node"))
+            ).groupBy("node").agg(F.min("component").alias("component"))
         prev_fp = fp
 
+    comp = _driver_finish(cur)
+    CheckpointHandle(cur).unpersist()  # superseded — comp is materialized
     if track is not None:
-        track.append(CheckpointHandle(cur))
-
-    # Converged: edges are (member -> root) stars. Roots map to themselves.
-    members = cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    roots = cur.select(F.col("dst").alias("node")).distinct().withColumn(
-        "component", F.col("node")
-    )
-    return members.union(roots).groupBy("node").agg(
-        F.min("component").alias("component")
-    )
+        track.append(CheckpointHandle(comp))
+    return comp
 
 
 def assign_components(uniq: DataFrame, pairs: DataFrame) -> DataFrame:

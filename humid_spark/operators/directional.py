@@ -12,7 +12,7 @@ interleaves — and ids are 1,2,... in seed(=key) walk order, so they are
 recovered exactly by ranking all cluster seeds globally (rank.py).
 
 Physical plan:
-  1. connected_components(edges)            — O(log n) shuffle rounds
+  1. connected_components(edges)            — star rounds, driver finish
   2. cogroup (nodes, edges) by component    — one shuffle each
   3. applyInPandas: humid_spark.oracle.cluster_greedy per component
      (the same code the tests use as ground truth; components are

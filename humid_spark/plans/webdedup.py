@@ -11,7 +11,8 @@ the same dataflow generalized to Common-Crawl-style text:
    -> MinHash signatures (vectorized pandas UDF)     [narrow, Arrow]
    -> LSH bands -> capped buckets -> candidate pairs [shuffle 2, skew-capped]
    -> signature-verify est_jaccard >= threshold      [shuffle 3]
-   -> connected components over doc-pair edges       [O(log n) rounds]
+   -> connected components over doc-pair edges       [star rounds above
+                                                      the driver budget]
    -> cluster ids + representatives -> sinks         [shuffle 4]
 
 Scale notes (100 TB / 1000 executors): every stage is a hash shuffle on

@@ -70,6 +70,24 @@ def _resolve_shuffle_partitions(
     return int(env) if env else None
 
 
+def _resolve_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """spark.driver.memory default: half the host's RAM, capped at 24g
+    (a fixed 24g is more heap than a smaller host has).  SPARK_DRIVER_MEM
+    overrides; without a readable MemTotal the default stays 24g."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{min(24 * 1024, kb // 2048)}m"
+
+
 def get_spark(
     app_name: str = "humid_spark",
     cores: int | None = None,
@@ -110,7 +128,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", _resolve_driver_memory())
         # serialized persisted blocks (e.g. the lsh pruned-bucket
         # checkpoint) compress with lz4: decode is cheap per-core CPU that
         # scales with executors, vs raw memory-bus traffic that does not

@@ -320,3 +320,42 @@ def test_cluster_map_scan_never_shuffles(cidx, spark):
         assert "BroadcastNestedLoop" not in plan
     res.release()
     delta.release()
+
+
+def test_snapshot_release_leaves_no_executor_storage(spark, tmp_path):
+    """The incremental counterpart of the web path's release check: a
+    full snapshot (build with clusters, dedup_batch, cluster_batch,
+    append) followed by res.release() and delta.release() leaves no RDD
+    blocks of its own in executor storage — CC's final checkpoint and the
+    superseded edge checkpoint included."""
+    import time
+
+    def stored_ids():
+        return {
+            info.id()
+            for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        }
+
+    before = stored_ids()
+    idx = DedupIndex.build(
+        _pages(spark, [("http://a/base", BASE), ("http://a/other", OTHER)]),
+        DedupConfig(),
+        str(tmp_path / "leak"),
+        with_clusters=True,
+    )
+    res = idx.dedup_batch(_pages(spark, [
+        ("http://b/crossnear", BASE + " tail words"),
+        ("http://b/f1", FRESH_A),
+        ("http://b/f2", FRESH_A + " appended tail"),
+    ]))
+    delta = idx.cluster_batch(res)
+    idx.append(res.survivors, "b", clusters=delta)
+    assert stored_ids() - before, "the snapshot should persist intermediates"
+    res.release()
+    delta.release()
+    for _ in range(50):  # unpersist is async; poll briefly
+        leaked = stored_ids() - before
+        if not leaked:
+            break
+        time.sleep(0.2)
+    assert not leaked, f"persisted blocks leaked past release(): {leaked}"

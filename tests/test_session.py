@@ -34,3 +34,21 @@ def test_aqe_broadcast_ceiling_topology_rule(monkeypatch):
     assert r(0) == "256m"    # cluster: unknown topology, keep prior default
     monkeypatch.setenv("SPARK_GRAFT_AQE_BCAST", "10m")
     assert r(32) == "10m"    # env still wins
+
+
+def test_driver_memory_follows_host_ram(monkeypatch, tmp_path):
+    """spark.driver.memory defaults to half of MemTotal, capped at 24g;
+    SPARK_DRIVER_MEM still wins."""
+    from humid_spark.session import _resolve_driver_memory as r
+
+    def meminfo(kb):
+        p = tmp_path / f"meminfo{kb}"
+        p.write_text(f"MemFree:  1000 kB\nMemTotal:  {kb} kB\n")
+        return str(p)
+
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    assert r(meminfo(16_000_000)) == "7812m"     # 15 GiB host: half
+    assert r(meminfo(128 * 2**20)) == "24576m"   # capped at 24g
+    assert r(str(tmp_path / "missing")) == "24g"
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "6g")
+    assert r(meminfo(16_000_000)) == "6g"
