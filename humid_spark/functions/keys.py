@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from humid_spark.config import DedupConfig
+from humid_spark.functions.urls import canonical_url
 
 
 def doc_id_expr(url: Column) -> Column:
@@ -46,6 +47,23 @@ def doc_id_expr(url: Column) -> Column:
     this helper is the single place to widen if a deployment disagrees.
     Tests monkeypatch this helper to a narrow hash to FORCE collisions."""
     return F.xxhash64(url)
+
+
+def doc_identity(cfg: DedupConfig) -> tuple[Column, Column]:
+    """(doc_id, usable) over a pages frame's ``url`` and ``text`` columns —
+    the one derivation ingest, annotate, takedown and the batch pipeline
+    share, so a page has the same identity on every path.  doc_id hashes
+    the canonical url when ``cfg.canonicalize_urls``; usable = non-null
+    text of at least max(shingle_k, 1) chars (shorter text has no
+    shingle).  ``doc_id_expr`` is resolved per call, so a patched helper
+    reaches every path."""
+    url = F.col("url")
+    if cfg.canonicalize_urls:
+        url = canonical_url(url)
+    usable = F.col("text").isNotNull() & (
+        F.length("text") >= max(cfg.shingle_k, 1)
+    )
+    return doc_id_expr(url), usable
 
 
 def extract_last_field(col: Column, sep: str) -> Column:

@@ -13,7 +13,10 @@ Spark-first shape (the 100-TB story):
   broadcast; ``hashed=True`` broadcasts 8-byte xxhash64 keys instead of
   gram strings, shrinking the build side ~10x (collision tolerance
   ~|doc_grams|*|bench_grams|/2^64, same accounting as the engine's
-  64-bit doc_id policy in plans/webdedup.py).
+  64-bit doc_id policy in plans/webdedup.py).  The broadcast is
+  unconditional — there is no shuffle-join fallback: a gram set that
+  outgrows a broadcast fails when Spark builds it, and ``hashed=True``
+  is the lever that shrinks it.
 - The corpus side NEVER shuffles for the flag itself: per-doc grams are
   deduplicated inside the row (array_distinct over the zip-built n-gram
   array — linear, see functions/textstats._word_ngrams), the explode
@@ -46,16 +49,14 @@ def _gram_col(text: Column, n: int) -> Column:
 
 
 def _bench_grams(
-    bench: DataFrame, prompt_col: str, n: int, hashed: bool,
-    broadcast_bench: bool,
+    bench: DataFrame, prompt_col: str, n: int, hashed: bool
 ) -> DataFrame:
     bg = bench.select(
         F.explode(_gram_col(F.col(prompt_col), n)).alias("g")
     )
     if hashed:
         bg = bg.select(F.xxhash64("g").alias("g"))
-    bg = bg.distinct()
-    return F.broadcast(bg) if broadcast_bench else bg
+    return F.broadcast(bg.distinct())
 
 
 def contamination_stats(
@@ -67,7 +68,6 @@ def contamination_stats(
     text_col: str = "text",
     prompt_col: str = "text",
     hashed: bool = False,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Per-document overlap stats vs a benchmark table.
 
@@ -80,7 +80,7 @@ def contamination_stats(
     composite/nullable-key corpora — it is also cheaper when only the
     surviving rows are needed).
     """
-    bg = _bench_grams(bench, prompt_col, n, hashed, broadcast_bench)
+    bg = _bench_grams(bench, prompt_col, n, hashed)
     dg = docs.select(
         F.col(id_col), F.explode(_gram_col(F.col(text_col), n)).alias("g")
     )
@@ -112,7 +112,6 @@ def decontaminate(
     text_col: str = "text",
     prompt_col: str = "text",
     hashed: bool = False,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Drop contaminated docs; returns the surviving rows of ``docs``
     with their full schema.  Cheaper than filtering contamination_stats:
@@ -122,7 +121,7 @@ def decontaminate(
     fetches — a contaminated fetch must not drop its url's OTHER
     fetches)."""
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
-    bg = _bench_grams(bench, prompt_col, n, hashed, broadcast_bench)
+    bg = _bench_grams(bench, prompt_col, n, hashed)
     dg = docs.select(
         *ids, F.explode(_gram_col(F.col(text_col), n)).alias("g")
     )

@@ -38,12 +38,15 @@ batch-bounded data:
   pair still meets exactly once), and buckets beyond ``bucket_cap`` are
   demoted with lineage (``demoted_cross_buckets``), never silently.
 
-``broadcast_batch=True`` (the default) is an execution hint, not a
-semantic switch: it asserts the batch's distinct key set fits in a
-broadcast (Spark's hard ceiling is 8 GB; with 16 bands a 10M-document
-snapshot broadcasts ~3 GB of band keys).  For a "batch" that is itself
-corpus-sized, pass False to fall back to shuffle joins — results are
-identical, pinned by tests/test_incremental.py's invariance test.
+The broadcast is unconditional: every operator here assumes the batch's
+distinct key set fits in a broadcast (Spark's hard ceiling is 8 GB; with
+16 bands a 10M-document snapshot broadcasts ~3 GB of band keys).  There
+is no shuffle fallback — a batch whose keys outgrow a broadcast fails
+when Spark builds the broadcast relation instead of silently switching
+to corpus-sized exchanges.  Corpus-sized ingest is not a "batch": it
+belongs in ``DedupIndex.build`` (plans/incremental.py) or
+``run_web_pipeline`` (plans/webdedup.py), which self-join with
+shuffles by design.
 
 Verification (exact Jaccard / signature estimate) is the caller's existing
 machinery — the pair schema matches lsh.verify_pairs.
@@ -59,7 +62,6 @@ def index_hit_keys(
     batch: DataFrame,
     index: DataFrame,
     key_col: str = "fp",
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Distinct ``key_col`` values present in BOTH batch and index.
 
@@ -69,9 +71,7 @@ def index_hit_keys(
     need both the exact-hit and the survivor side of a batch derive both
     from this one (tiny) table instead of scanning the index twice.
     """
-    keys = batch.select(key_col).distinct()
-    if broadcast_batch:
-        keys = F.broadcast(keys)
+    keys = F.broadcast(batch.select(key_col).distinct())
     return index.select(key_col).join(keys, key_col, "semi").distinct()
 
 
@@ -79,23 +79,15 @@ def exact_survivors(
     batch: DataFrame,
     index: DataFrame,
     key_col: str = "fp",
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Rows of ``batch`` whose ``key_col`` does not appear in ``index``.
 
-    Broadcast two-step (default): the batch-bounded hit-key set from
+    Broadcast two-step: the batch-bounded hit-key set from
     ``index_hit_keys`` is broadcast into a map-side anti join — the index
-    is scanned once and shuffled never.  With ``broadcast_batch=False``
-    this degrades to the classic hash anti join (both sides exchange on
-    ``key_col``), which is only the right plan when the "batch" is itself
-    too large to broadcast its distinct keys.
+    is scanned once and shuffled never.
     """
-    if broadcast_batch:
-        hits = F.broadcast(index_hit_keys(batch, index, key_col))
-        return batch.join(hits, key_col, "left_anti")
-    return batch.join(
-        index.select(key_col).distinct(), key_col, "left_anti"
-    )
+    hits = F.broadcast(index_hit_keys(batch, index, key_col))
+    return batch.join(hits, key_col, "left_anti")
 
 
 def cross_band_pairs(
@@ -105,7 +97,6 @@ def cross_band_pairs(
     bucket_cap: int = 2000,
     salts: int = 16,
     track: list | None = None,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Asymmetric candidate generation: batch bands vs index bands.
 
@@ -136,9 +127,7 @@ def cross_band_pairs(
     batch = batch_buckets.select(
         F.col("doc_id").alias("src"), "band", "bucket"
     )
-    bkeys = batch.select("band", "bucket").distinct()
-    if broadcast_batch:
-        bkeys = F.broadcast(bkeys)
+    bkeys = F.broadcast(batch.select("band", "bucket").distinct())
     touched = index_buckets.join(bkeys, ["band", "bucket"], "semi")
     # per-bucket counts are identical on `touched` and on the full index
     # for every touched bucket (the semi-join keeps whole buckets), so the
@@ -181,7 +170,6 @@ def demoted_cross_buckets(
     index_buckets: DataFrame,
     bucket_cap: int = 2000,
     batch_buckets: DataFrame | None = None,
-    broadcast_batch: bool = True,
 ) -> DataFrame:
     """Lineage: the (band, bucket, bucket_size) index buckets the cap
     demoted — capped coverage is never silent (same contract as
@@ -196,9 +184,7 @@ def demoted_cross_buckets(
     buckets = index_buckets
     if batch_buckets is not None:
         bkeys = batch_buckets.select("band", "bucket").distinct()
-        if broadcast_batch:
-            bkeys = F.broadcast(bkeys)
-        buckets = buckets.join(bkeys, ["band", "bucket"], "semi")
+        buckets = buckets.join(F.broadcast(bkeys), ["band", "bucket"], "semi")
     return (
         buckets.groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("bucket_size"))

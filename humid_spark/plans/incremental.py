@@ -45,10 +45,15 @@ ingest/append, so the 16x explode + bucket hashing is paid once per
 document ever, not once per snapshot) restricted at the scan to
 batch-touched buckets, and the verify step reads (doc_id, minhash) into
 an equi-join probed map-side against the broadcast candidate set
-(``broadcast_candidates``, default on — measured 58.4 -> 47.9s classify
-at 1M/100k vs the shuffle verify; switch it off for corpora whose hot
-content makes the candidate set outgrow a broadcast, where a uniq table
-bucketed by doc_id would storage-partition the shuffle away instead).
+(measured 58.4 -> 47.9s classify at 1M/100k vs a shuffle verify).
+
+Every batch-side broadcast is unconditional — one join plan, no
+shuffle fallback (operators/incremental.py): a snapshot whose keys or
+candidate set outgrow a broadcast fails instead of shuffling the index,
+and corpus-sized ingest belongs in `DedupIndex.build` or
+`run_web_pipeline`.  (A corpus whose hot content makes the candidate set
+outgrow a broadcast would need a uniq table bucketed by doc_id, so a
+storage-partitioned join removes the shuffle.)
 Measured (1M-corpus / 100k-batch
 A/B, BENCH/incremental_ab.py): the materialized band table cut the
 per-snapshot classify ~10% at 1M (93.1s -> 83.6s) — the bigger effect is
@@ -102,8 +107,8 @@ class IncrementalResult:
     near_pairs: DataFrame   # (src=batch doc_id, dst=index doc_id, est_jaccard)
     survivors: DataFrame    # batch uniq rows that are NEW content vs the index
     demoted: DataFrame      # capped index-side (band, bucket) lineage
-    fresh: DataFrame = None  # batch uniq rows past the exact tier (near + new)
-    fresh_buckets: DataFrame = None  # (doc_id, band, bucket) of fresh docs
+    fresh: DataFrame        # batch uniq rows past the exact tier (near + new)
+    fresh_buckets: DataFrame  # (doc_id, band, bucket) of fresh docs
     persisted: list = field(default_factory=list)
 
     def release(self) -> None:
@@ -272,6 +277,13 @@ class DedupIndex:
     _BANDS_SCHEMA = "doc_id long, band int, bucket long"
     _CLUSTERS_SCHEMA = "doc_id long, cluster long"
     _REMAP_SCHEMA = "old_cluster long, new_cluster long"
+    # rows per file of the (long, long) cluster-map and remap writes:
+    # 64 MB of plain values
+    _MAP_ROWS_PER_FILE = 1 << 22
+
+    @classmethod
+    def _map_files(cls, rows: int) -> int:
+        return max(1, -(-rows // cls._MAP_ROWS_PER_FILE))
 
     @staticmethod
     def _write_manifest(root: str, manifest: dict) -> None:
@@ -305,12 +317,7 @@ class DedupIndex:
 
     # ---- per-snapshot dedup ---------------------------------------------
 
-    def dedup_batch(
-        self,
-        pages: DataFrame,
-        broadcast_batch: bool = True,
-        broadcast_candidates: bool | None = None,
-    ) -> IncrementalResult:
+    def dedup_batch(self, pages: DataFrame) -> IncrementalResult:
         """Classify a new snapshot against the index.
 
         exact tier: ONE column-pruned index scan (text_hash alone) probed
@@ -322,22 +329,10 @@ class DedupIndex:
         (cross_band_pairs — batch-touched-bucket restriction, one-sided
         caps and salting on the index side) + signature verify at
         cfg.jaccard_threshold.  survivors = batch uniques that passed both
-        tiers; feed them to `append` to ingest.
-
-        ``broadcast_batch=False`` reverts every tier to shuffle joins for
-        a "batch" too large to broadcast its distinct keys (results
-        identical, plan O(C)-exchange-heavy — see operators docstring).
-        ``broadcast_candidates`` (default: follow ``broadcast_batch``)
-        additionally broadcasts the verified-candidate side of the
-        signature verify join — the one remaining index-sized exchange
-        otherwise; its broadcast bound is looser (candidates are
-        cap-bounded per batch band row, not batch-bounded), so it gets
-        its own switch for corpora where hot content makes the candidate
-        set large."""
+        tiers; feed them to `append` to ingest.  A batch whose keys
+        outgrow a broadcast fails (module docstring): ingest
+        corpus-sized input with `build`."""
         from pyspark import StorageLevel
-
-        if broadcast_candidates is None:
-            broadcast_candidates = broadcast_batch
 
         spark = pages.sparkSession
         persisted: list = []
@@ -355,11 +350,11 @@ class DedupIndex:
 
         # hit-key set: <= batch-many longs, persisted once, broadcast into
         # both tiers below — the ONLY read of the index's text_hash column
-        hit_keys = index_hit_keys(
-            batch_uniq, index, "text_hash", broadcast_batch=broadcast_batch
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        hit_keys = index_hit_keys(batch_uniq, index, "text_hash").persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         persisted.append(hit_keys)
-        bhits = F.broadcast(hit_keys) if broadcast_batch else hit_keys
+        bhits = F.broadcast(hit_keys)
         exact_hits = batch_uniq.join(bhits, "text_hash", "semi").select(
             "text_hash", "doc_id", "count"
         )
@@ -375,7 +370,6 @@ class DedupIndex:
             bucket_cap=self.cfg.bucket_cap,
             salts=self.cfg.lsh_salts,
             track=persisted,
-            broadcast_batch=broadcast_batch,
         )
         withs = cand.join(
             bsig.select(
@@ -384,14 +378,13 @@ class DedupIndex:
             ),
             "src",
         )
-        if broadcast_candidates:
-            # the last index-sized exchange: without the hint the verify
-            # equi-join shuffles the index's (doc_id, minhash) — the
-            # dominant index bytes — per snapshot; the candidate side is
-            # cap-bounded (<= batch band rows x bucket_cap before the
-            # distinct, pair-shaped after), so broadcasting it makes the
-            # verify a map-side probe of the signature scan
-            withs = F.broadcast(withs)
+        # the last index-sized exchange: without the hint the verify
+        # equi-join shuffles the index's (doc_id, minhash) — the dominant
+        # index bytes — per snapshot; the candidate side is cap-bounded
+        # (<= batch band rows x bucket_cap before the distinct,
+        # pair-shaped after), so broadcasting it makes the verify a
+        # map-side probe of the signature scan
+        withs = F.broadcast(withs)
         near_pairs = (
             withs.join(
                 isig.select(
@@ -430,16 +423,13 @@ class DedupIndex:
                 ibuckets,
                 bucket_cap=self.cfg.bucket_cap,
                 batch_buckets=bbuckets,
-                broadcast_batch=broadcast_batch,
             ),
             persisted=persisted,
         )
 
     # ---- incremental clustering ------------------------------------------
 
-    def cluster_batch(
-        self, res: IncrementalResult, broadcast_batch: bool = True
-    ) -> ClusterDelta:
+    def cluster_batch(self, res: IncrementalResult) -> ClusterDelta:
         """Maintain the persistent cluster map across a snapshot: assign a
         cluster id to every fresh batch doc and record the merges the batch
         induced — WITHOUT re-clustering the corpus.
@@ -482,13 +472,8 @@ class DedupIndex:
         fresh_sigs = res.fresh.select("doc_id", "minhash")
         # the fresh band table was already derived in dedup_batch's cross
         # tier — reuse the plan instead of paying the explode twice
-        bb = (
-            res.fresh_buckets
-            if res.fresh_buckets is not None
-            else lsh.band_buckets(fresh_sigs, self.cfg)
-        )
         internal = lsh.verify_pairs(
-            lsh.candidate_pairs(bb, self.cfg, track=persisted),
+            lsh.candidate_pairs(res.fresh_buckets, self.cfg, track=persisted),
             fresh_sigs,
             self.cfg,
         )
@@ -496,9 +481,7 @@ class DedupIndex:
         touched = res.near_pairs.select(
             F.col("dst").alias("doc_id")
         ).distinct()
-        dstc = self.clusters_of(
-            spark, touched, broadcast_batch=broadcast_batch, track=persisted
-        ).select(
+        dstc = self.clusters_of(spark, touched, track=persisted).select(
             F.col("doc_id").alias("dst"), F.col("cluster").alias("cur")
         )
 
@@ -572,7 +555,6 @@ class DedupIndex:
         spark: SparkSession,
         docs: DataFrame,
         *,
-        broadcast_batch: bool = True,
         track: list | None = None,
     ) -> DataFrame:
         """Point lookup: the current cluster of each ``docs.doc_id``
@@ -589,19 +571,18 @@ class DedupIndex:
                 "index has no cluster map: build(with_clusters=True)"
             )
         keys = docs.select("doc_id").distinct()
-        bkeys = F.broadcast(keys) if broadcast_batch else keys
-        present = self.clusters(spark).join(bkeys, "doc_id", "semi")
+        present = self.clusters(spark).join(
+            F.broadcast(keys), "doc_id", "semi"
+        )
         if track is not None:
             from pyspark import StorageLevel
 
             present = present.persist(StorageLevel.MEMORY_AND_DISK)
             track.append(present)
         hit_ids = present.select("doc_id")
-        missing = keys.join(
-            F.broadcast(hit_ids) if broadcast_batch else hit_ids,
-            "doc_id",
-            "anti",
-        ).withColumn("cluster", F.col("doc_id"))
+        missing = keys.join(F.broadcast(hit_ids), "doc_id", "anti").withColumn(
+            "cluster", F.col("doc_id")
+        )
         return present.unionByName(missing)
 
     def annotate_batch(
@@ -609,7 +590,6 @@ class DedupIndex:
         pages: DataFrame,
         res: IncrementalResult,
         delta: ClusterDelta,
-        broadcast_batch: bool = True,
     ) -> DataFrame:
         """Every batch page annotated with its persistent cluster id —
         the incremental analog of the batch pipeline's annotate sink
@@ -628,35 +608,22 @@ class DedupIndex:
                 "index has no cluster map: build(with_clusters=True)"
             )
         spark = pages.sparkSession
-        min_len = max(self.cfg.shingle_k, 1)
-        url = F.col("url")
-        if self.cfg.canonicalize_urls:
-            from humid_spark.functions.urls import canonical_url
-
-            url = canonical_url(url)
         from humid_spark.functions import keys
 
-        docs = pages.withColumn("doc_id", keys.doc_id_expr(url)).withColumn(
-            "usable",
-            F.col("text").isNotNull() & (F.length("text") >= min_len),
+        doc_id, usable = keys.doc_identity(self.cfg)
+        docs = pages.withColumn("doc_id", doc_id).withColumn(
+            "usable", usable
         ).withColumn(
             "text_hash",
             F.when(F.col("usable"), F.xxhash64(F.col("text"))),
         )
 
-        hit_keys = res.exact_hits.select("text_hash")
-        bhits = F.broadcast(hit_keys) if broadcast_batch else hit_keys
+        hit_keys = F.broadcast(res.exact_hits.select("text_hash"))
         ihit = self.uniq(spark).select("text_hash", "doc_id").join(
-            bhits, "text_hash", "semi"
+            hit_keys, "text_hash", "semi"
         )
-        def _b(df):
-            return F.broadcast(df) if broadcast_batch else df
-
         exact_map = ihit.join(
-            _b(self.clusters_of(
-                spark, ihit, broadcast_batch=broadcast_batch
-            )),
-            "doc_id",
+            F.broadcast(self.clusters_of(spark, ihit)), "doc_id"
         ).select("text_hash", F.col("cluster").alias("cluster_id"))
         # keyed off res.fresh, NOT batch_uniq: when one url carries both
         # an indexed text and a new text in the same snapshot, both
@@ -666,11 +633,11 @@ class DedupIndex:
         # (.distinct(): one url carrying two NEW texts duplicates its
         # doc_id in the assignments — same cluster, so dedupe is safe)
         fresh_map = res.fresh.select("text_hash", "doc_id").join(
-            _b(delta.assignments), "doc_id"
+            F.broadcast(delta.assignments), "doc_id"
         ).select("text_hash", F.col("cluster").alias("cluster_id")).distinct()
         # broadcast the batch-bounded map into the final join: the wide
         # page payload (text/html) never enters an exchange at all
-        tmap = _b(exact_map.unionByName(fresh_map))
+        tmap = F.broadcast(exact_map.unionByName(fresh_map))
         return (
             docs.join(tmap, "text_hash", "left")
             .withColumn(
@@ -794,7 +761,12 @@ class DedupIndex:
                 handles.append(CheckpointHandle(arows))
                 rrows = clusters.remap.localCheckpoint(eager=True)
                 handles.append(CheckpointHandle(rrows))
-                arows.write.mode("overwrite").parquet(
+                # both tables keep their plans' shuffle partitioning (one
+                # small file per partition, 8 at local[4]) for 16 bytes a
+                # row: size the writes by row count instead
+                arows.coalesce(self._map_files(arows.count())).write.mode(
+                    "overwrite"
+                ).parquet(
                     self._batch_dir(self._clusters_dir(self.root), batch_id)
                 )
                 # composition only ever ADDS rows (new merges map current
@@ -804,7 +776,9 @@ class DedupIndex:
                 # clusters() and compact()'s no-op check stay meaningful
                 n_new = rrows.count()
                 if n_new != n_remap:
-                    rrows.write.mode("overwrite").parquet(
+                    rrows.coalesce(self._map_files(n_new)).write.mode(
+                        "overwrite"
+                    ).parquet(
                         os.path.join(
                             self._remaps_dir(self.root), f"v-{remap_v + 1}"
                         )
@@ -832,7 +806,7 @@ class DedupIndex:
 
     # ---- row-level deletes (merge-on-read tombstones) ----------------------
 
-    def delete(self, docs: DataFrame, broadcast_keys: bool = True) -> int:
+    def delete(self, docs: DataFrame) -> int:
         """Remove pages from the index without rewriting it — takedown /
         right-to-be-forgotten at corpus scale, the Iceberg equality-delete
         discipline (file-based).
@@ -871,32 +845,22 @@ class DedupIndex:
 
         Like the remap table, the tombstone table must stay broadcastable
         — it is bounded by deletions since the last compact, and compact
-        resets it.  ``broadcast_keys=False`` degrades the key probe to a
-        shuffle semi-join for a takedown list too large to broadcast its
-        distinct ids (same switch contract as dedup_batch)."""
+        resets it.  The takedown keys are always broadcast too (the same
+        one-plan contract as dedup_batch): a takedown list too large to
+        broadcast fails rather than shuffling the index — split it."""
         spark = docs.sparkSession
-
-        def _b(df):
-            return F.broadcast(df) if broadcast_keys else df
-
         uniq = self.uniq(spark).select("text_hash", "doc_id")
         parts = []
         keys = None
         if "doc_id" in docs.columns:
             keys = docs.select("doc_id").distinct()
         elif "url" in docs.columns:
-            url = F.col("url")
-            if self.cfg.canonicalize_urls:
-                from humid_spark.functions.urls import canonical_url
-
-                url = canonical_url(url)
             from humid_spark.functions import keys as keyfns
 
-            keys = docs.select(
-                keyfns.doc_id_expr(url).alias("doc_id")
-            ).distinct()
+            doc_id, _ = keyfns.doc_identity(self.cfg)
+            keys = docs.select(doc_id.alias("doc_id")).distinct()
         if keys is not None:
-            parts.append(uniq.join(_b(keys), "doc_id", "semi"))
+            parts.append(uniq.join(F.broadcast(keys), "doc_id", "semi"))
             if self.manifest.get("clusters"):
                 # scrub map rows of docs that were DROPPED as near-dups:
                 # they have cluster rows but no uniq row, so the identity
@@ -905,7 +869,7 @@ class DedupIndex:
                 parts.append(
                     self.clusters(spark)
                     .select("doc_id")
-                    .join(_b(keys), "doc_id", "semi")
+                    .join(F.broadcast(keys), "doc_id", "semi")
                     .distinct()
                     .select(
                         F.lit(None).cast("long").alias("text_hash"),
@@ -918,7 +882,7 @@ class DedupIndex:
                 .select(F.xxhash64("text").alias("text_hash"))
                 .distinct()
             )
-            parts.append(uniq.join(_b(tkeys), "text_hash", "semi"))
+            parts.append(uniq.join(F.broadcast(tkeys), "text_hash", "semi"))
         if not parts:
             raise ValueError(
                 "delete needs a doc_id, url, or text column to target"
@@ -1173,20 +1137,12 @@ class DedupIndex:
         """pages -> (text_hash, doc_id=min over exact copies, minhash
         [, count]): the same signatures-at-the-scan + exact-collapse shape
         as run_web_pipeline (webdedup.py) — text never enters a shuffle."""
-        min_len = max(cfg.shingle_k, 1)
-        url = F.col("url")
-        if cfg.canonicalize_urls:
-            from humid_spark.functions.urls import canonical_url
-
-            url = canonical_url(url)
         from humid_spark.functions import keys
 
+        doc_id, is_usable = keys.doc_identity(cfg)
         usable = (
-            pages.withColumn("doc_id", keys.doc_id_expr(url))
-            .filter(
-                F.col("text").isNotNull()
-                & (F.length("text") >= min_len)
-            )
+            pages.withColumn("doc_id", doc_id)
+            .filter(is_usable)
             .withColumn("text_hash", F.xxhash64(F.col("text")))
         )
         sigs = minhash_map_in_arrow(

@@ -127,21 +127,10 @@ def run_web_pipeline(
         df, cached = store.get_or_compute(spark, stage, compute)
         return df
 
-    min_len = max(cfg.shingle_k, 1)
-    url = F.col("url")
-    if cfg.canonicalize_urls:
-        from humid_spark.functions.urls import canonical_url
-
-        url = canonical_url(url)
     from humid_spark.functions import keys
 
-    docs = (
-        pages.withColumn("doc_id", keys.doc_id_expr(url))
-        .withColumn(
-            "usable",
-            F.col("text").isNotNull() & (F.length("text") >= min_len),
-        )
-    )
+    doc_id, is_usable = keys.doc_identity(cfg)
+    docs = pages.withColumn("doc_id", doc_id).withColumn("usable", is_usable)
 
     # Signatures are computed AT THE SCAN (narrow — the text payload never
     # enters a shuffle), then the exact-duplicate collapse (A1) groups the

@@ -5,6 +5,8 @@ batch) equals a from-scratch build over the union."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -212,6 +214,13 @@ def test_randomized_split_parity_with_full_rebuild(spark, tmp_path, seed):
     idx.append(res.survivors, "b", clusters=delta)
     res.release()
     delta.release()
+    # the batch's map rows and the new remap version are one file each,
+    # not one per shuffle partition of the fresh side
+    for d in (
+        idx._batch_dir(idx._clusters_dir(idx.root), "b"),
+        os.path.join(idx._remaps_dir(idx.root), "v-1"),
+    ):
+        assert len([f for f in os.listdir(d) if f.endswith(".parquet")]) == 1
     got = {r["doc_id"]: r["cluster"] for r in idx.clusters(spark).collect()}
 
     full = DedupIndex.build(
@@ -265,6 +274,41 @@ def test_annotate_batch_per_page_clusters(cidx, spark):
     assert "BroadcastNestedLoop" not in plan
     res.release()
     delta.release()
+
+
+def test_canonical_url_identity_reaches_annotate_and_delete(
+    spark, tmp_path
+):
+    """With canonicalize_urls, a page ingested under one url variant keeps
+    ONE identity across the incremental tier: a re-crawl under another
+    variant annotates with the ingested doc's id and cluster, and a
+    takedown by a third variant removes the ingested row and map entry."""
+    idx = DedupIndex.build(
+        _pages(spark, [("http://c.example/a", BASE),
+                       ("http://c.example/b", OTHER)]),
+        DedupConfig(canonicalize_urls=True),
+        str(tmp_path / "canon"),
+        with_clusters=True,
+    )
+    a_id = _doc_id("http://c.example/a", spark)
+    batch = _pages(
+        spark, [("HTTP://C.Example/a/?utm_source=feed#top", BASE)]
+    )
+    res = idx.dedup_batch(batch)
+    delta = idx.cluster_batch(res)
+    row = idx.annotate_batch(batch, res, delta).first()
+    assert (row["doc_id"], row["cluster_id"]) == (a_id, a_id)
+    assert res.exact_hits.count() == 1
+    res.release()
+    delta.release()
+
+    takedown = spark.createDataFrame(
+        [("http://C.EXAMPLE:80/a#frag",)], "url string"
+    )
+    assert idx.delete(takedown) == 2  # uniq row + map-scrub identity row
+    assert a_id not in {r["doc_id"] for r in idx.uniq(spark).collect()}
+    assert a_id not in {r["doc_id"] for r in idx.clusters(spark).collect()}
+    assert idx.uniq(spark).count() == 1  # the other page is untouched
 
 
 def test_cluster_tier_guards(cidx, spark, tmp_path):

@@ -210,25 +210,6 @@ def test_index_side_never_shuffles(index, spark):
     res.release()
 
 
-def test_broadcast_off_is_equivalent(index, spark):
-    """broadcast_batch=False (the corpus-sized-batch fallback) must give
-    identical classifications through shuffle joins."""
-    batch = _pages(
-        spark,
-        [("http://f/exact", BASE), ("http://f/near", BASE + " extra tail"),
-         ("http://f/fresh", OTHER * 2)],
-    )
-    a = index.dedup_batch(batch)
-    b = index.dedup_batch(batch, broadcast_batch=False)
-    for da, db in ((a.exact_hits, b.exact_hits), (a.survivors, b.survivors),
-                   (a.near_pairs, b.near_pairs)):
-        assert sorted(map(tuple, da.collect())) == sorted(
-            map(tuple, db.collect())
-        )
-    a.release()
-    b.release()
-
-
 def test_index_scans_are_column_pruned(index, spark):
     """The index is never scanned whole: the exact tier reads text_hash
     alone, the near tier reads the materialized band table, and the
