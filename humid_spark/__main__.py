@@ -252,7 +252,7 @@ def main(argv: list[str] | None = None) -> None:
                         # for the operator, the delta for the atomic
                         # append commit below — which ingests the WRITTEN
                         # assignments (the survivors discipline: index ==
-                        # sink, and the plan is not executed twice)
+                        # sink)
                         delta = idx.cluster_batch(res)
                         cobs = Observation()
                         (delta.assignments

@@ -108,13 +108,16 @@ class IncrementalResult:
     survivors: DataFrame    # batch uniq rows that are NEW content vs the index
     demoted: DataFrame      # capped index-side (band, bucket) lineage
     fresh: DataFrame        # batch uniq rows past the exact tier (near + new)
+    fresh_rows: int         # rows in `fresh`
     fresh_buckets: DataFrame  # (doc_id, band, bucket) of fresh docs
     persisted: list = field(default_factory=list)
 
     def release(self) -> None:
-        """Unpersist the per-batch cached intermediates (the index scan and
-        the pruned cross-join membership).  Lineage survives — later
-        actions recompute instead of failing."""
+        """Free the batch's checkpointed tables (`dedup_batch`).  The
+        checkpoints truncated lineage, so after release no frame of this
+        result — nor any frame derived from one, a `ClusterDelta`'s
+        included — can be computed again: write or collect what is needed
+        first."""
         for df in self.persisted:
             df.unpersist()
 
@@ -154,11 +157,14 @@ class ClusterDelta:
     caused by this batch relabel existing clusters lazily at read time
     (merge-on-read) instead of rewriting the corpus-sized cluster table.
     batch_pairs: the verified within-batch near pairs (lineage — these
-    edges exist in no other surface)."""
+    edges exist in no other surface).  The two row counts size `append`'s
+    writes and its manifest entry without a count job."""
 
     assignments: DataFrame  # (doc_id, cluster) for every fresh batch doc
     remap: DataFrame        # full replacement (old_cluster, new_cluster)
     batch_pairs: DataFrame  # verified within-batch (src, dst, est_jaccard)
+    assignment_rows: int    # rows in `assignments` (one per fresh row)
+    remap_rows: int         # rows in `remap`: the index's + this batch's merges
     persisted: list = field(default_factory=list)
 
     def release(self) -> None:
@@ -287,12 +293,22 @@ class DedupIndex:
 
     @staticmethod
     def _write_manifest(root: str, manifest: dict) -> None:
-        """Atomic commit: tmp file + os.replace — readers see the old or
-        the new manifest, never a torn one."""
-        tmp = DedupIndex._manifest_path(root) + ".tmp"
+        """Atomic, durable commit: tmp file + os.replace — readers see the
+        old or the new manifest, never a torn one.  The tmp file is synced
+        before the rename and the directory after it, so a power loss can
+        neither surface an empty manifest nor undo a returned commit."""
+        path = DedupIndex._manifest_path(root)
+        tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f, indent=1)
-        os.replace(tmp, DedupIndex._manifest_path(root))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+        fd = os.open(root, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     @classmethod
     def load(cls, root: str, cfg: DedupConfig) -> "DedupIndex":
@@ -322,20 +338,36 @@ class DedupIndex:
 
         exact tier: ONE column-pruned index scan (text_hash alone) probed
         map-side against the broadcast batch keys; the resulting
-        batch-bounded hit-key set is persisted once and broadcast into
-        BOTH the exact-hit semi join and the survivor anti join — the
-        index side never enters an exchange (operators/incremental.py
-        module docstring).  near tier: asymmetric band join
-        (cross_band_pairs — batch-touched-bucket restriction, one-sided
-        caps and salting on the index side) + signature verify at
-        cfg.jaccard_threshold.  survivors = batch uniques that passed both
-        tiers; feed them to `append` to ingest.  A batch whose keys
-        outgrow a broadcast fails (module docstring): ingest
-        corpus-sized input with `build`."""
-        from pyspark import StorageLevel
+        batch-bounded hit-key set is broadcast into BOTH the exact-hit
+        semi join and the fresh-row anti join — the index side never
+        enters an exchange (operators/incremental.py module docstring).
+        near tier: asymmetric band join (cross_band_pairs — batch-touched-
+        bucket restriction, one-sided caps and salting on the index side)
+        + signature verify at cfg.jaccard_threshold.  survivors = batch
+        uniques that passed both tiers; feed them to `append` to ingest.
+        A batch whose keys outgrow a broadcast fails (module docstring):
+        ingest corpus-sized input with `build`.
+
+        Materialization: each batch-bounded table — the collapsed batch,
+        the hit-key set, the fresh rows, their band table and the verified
+        near pairs — is computed ONCE, here, by an eager localCheckpoint.
+        Every frame on the result is derived from those small leaves, so
+        `cluster_batch`, `append` and the caller's sinks never re-plan the
+        index-scanning chain; the index is read by exactly the hit-key and
+        near-pair checkpoint jobs.  The leaves live until
+        `IncrementalResult.release()`."""
+        from pyspark.sql import Observation
+
+        from humid_spark.operators.cc import CheckpointHandle
 
         spark = pages.sparkSession
         persisted: list = []
+
+        def materialize(df: DataFrame) -> DataFrame:
+            df = df.localCheckpoint(eager=True)
+            persisted.append(CheckpointHandle(df))
+            return df
+
         # the index is NEVER cached whole: each tier scans only its
         # columns (text_hash alone for the exact tier; the materialized
         # band table; (doc_id, minhash) for the verify join) — at corpus
@@ -343,33 +375,37 @@ class DedupIndex:
         # signature arrays, and the memory footprint stays batch-sized
         index = self.uniq(spark)
 
-        batch_uniq = self._uniq_of(pages, self.cfg, count=True).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        persisted.append(batch_uniq)
+        batch_uniq = materialize(self._uniq_of(pages, self.cfg, count=True))
 
-        # hit-key set: <= batch-many longs, persisted once, broadcast into
-        # both tiers below — the ONLY read of the index's text_hash column
-        hit_keys = index_hit_keys(batch_uniq, index, "text_hash").persist(
-            StorageLevel.MEMORY_AND_DISK
+        # hit-key set: <= batch-many longs, broadcast into both tiers
+        # below — the ONLY read of the index's text_hash column
+        hit_keys = materialize(
+            index_hit_keys(batch_uniq, index, "text_hash")
         )
-        persisted.append(hit_keys)
         bhits = F.broadcast(hit_keys)
         exact_hits = batch_uniq.join(bhits, "text_hash", "semi").select(
             "text_hash", "doc_id", "count"
         )
-        fresh = batch_uniq.join(bhits, "text_hash", "anti")
+        # the fresh row count rides the checkpoint job: it sizes the
+        # cluster-map write in `append` without a count of its own
+        n_fresh = Observation()
+        fresh = materialize(
+            batch_uniq.join(bhits, "text_hash", "anti").observe(
+                n_fresh, F.count(F.lit(1)).alias("rows")
+            )
+        )
 
         bsig = fresh.select("doc_id", "minhash")
         isig = index.select("doc_id", "minhash")
         ibuckets = self.bands(spark)
-        bbuckets = lsh.band_buckets(bsig, self.cfg)
+        bbuckets = materialize(lsh.band_buckets(bsig, self.cfg))
+        track: list = []
         cand = cross_band_pairs(
             bbuckets,
             ibuckets,
             bucket_cap=self.cfg.bucket_cap,
             salts=self.cfg.lsh_salts,
-            track=persisted,
+            track=track,
         )
         withs = cand.join(
             bsig.select(
@@ -385,7 +421,7 @@ class DedupIndex:
         # pair-shaped after), so broadcasting it makes the verify a
         # map-side probe of the signature scan
         withs = F.broadcast(withs)
-        near_pairs = (
+        near_pairs = materialize(
             withs.join(
                 isig.select(
                     F.col("doc_id").alias("dst"),
@@ -400,15 +436,14 @@ class DedupIndex:
                 F.col("est_jaccard") >= F.lit(self.cfg.jaccard_threshold)
             )
             .select("src", "dst", "est_jaccard")
-            # pair-sized (post-verify) and read at least twice: once by the
-            # survivors anti-join, once by the caller acting on near_pairs —
-            # without the persist the band join + verify chain re-runs per
-            # action (measured 19.3s -> ~7s for the sf0.01 bench headline)
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        persisted.append(near_pairs)
+        # the pruned touched-index membership fed only the checkpoint above
+        for h in track:
+            h.unpersist()
+        # an anti join needs no distinct build side: broadcasting the
+        # (pair-sized) src column keeps survivors exchange-free
         survivors = fresh.join(
-            near_pairs.select(F.col("src").alias("doc_id")).distinct(),
+            F.broadcast(near_pairs.select(F.col("src").alias("doc_id"))),
             "doc_id",
             "anti",
         )
@@ -418,6 +453,7 @@ class DedupIndex:
             near_pairs=near_pairs,
             survivors=survivors,
             fresh=fresh,
+            fresh_rows=int(n_fresh.get["rows"]),
             fresh_buckets=bbuckets,
             demoted=demoted_cross_buckets(
                 ibuckets,
@@ -435,7 +471,7 @@ class DedupIndex:
         induced — WITHOUT re-clustering the corpus.
 
         Call between `dedup_batch` and `append` (it reads the result's
-        persisted intermediates; release after, not before), then pass the
+        checkpointed leaves; release after, not before), then pass the
         delta to ``append(clusters=...)`` so the map commits atomically
         with the batch.
 
@@ -470,8 +506,8 @@ class DedupIndex:
         persisted: list = []
 
         fresh_sigs = res.fresh.select("doc_id", "minhash")
-        # the fresh band table was already derived in dedup_batch's cross
-        # tier — reuse the plan instead of paying the explode twice
+        # the fresh band table was already materialized by dedup_batch's
+        # cross tier — reuse it instead of paying the explode twice
         internal = lsh.verify_pairs(
             lsh.candidate_pairs(res.fresh_buckets, self.cfg, track=persisted),
             fresh_sigs,
@@ -500,7 +536,15 @@ class DedupIndex:
                 F.coalesce("component", "doc_id").alias("cluster"),
             )
         )
-        # merges: a touched root whose component got a smaller id
+        # merges: a touched root whose component got a smaller id.  The
+        # composition below references new_remap TWICE (the retarget join
+        # and the union), so the merges-sized table is checkpointed once,
+        # and its row count rides that job
+        from pyspark.sql import Observation
+
+        from humid_spark.operators.cc import CheckpointHandle
+
+        n_merges = Observation()
         new_remap = (
             dstc.select(F.col("cur").alias("node")).distinct()
             .join(comp, "node")
@@ -509,18 +553,16 @@ class DedupIndex:
                 F.col("node").alias("old_cluster"),
                 F.col("component").alias("new_cluster"),
             )
+            .observe(n_merges, F.count(F.lit(1)).alias("rows"))
+            .localCheckpoint(eager=True)
         )
-        # the composition below references new_remap TWICE (the retarget
-        # join and the union): persist the merges-sized table so its
-        # cluster-map-probe + CC-consume chain (several broadcast jobs)
-        # evaluates once per action, not once per reference
-        from pyspark import StorageLevel
-
-        new_remap = new_remap.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(new_remap)
+        persisted.append(CheckpointHandle(new_remap))
         # compose with the current remap so the stored table stays fully
         # root-resolved (one broadcast join resolves any doc at read time,
         # no chains): old entries whose target just merged follow it.
+        # Composition only ever ADDS rows — new merges map current roots,
+        # which never appear as old keys — so the result holds the
+        # index's remap_rows plus this batch's merges.
         # remap_rows == 0 (fresh or freshly-compacted index, the common
         # case at snapshot 1) skips the compose outright — joining and
         # unioning against a provably-empty table only adds exchanges.
@@ -547,6 +589,9 @@ class DedupIndex:
             assignments=assignments,
             remap=remap,
             batch_pairs=internal,
+            assignment_rows=res.fresh_rows,
+            remap_rows=self.manifest.get("remap_rows", 0)
+            + int(n_merges.get["rows"]),
             persisted=persisted,
         )
 
@@ -717,7 +762,13 @@ class DedupIndex:
 
         With a cluster map, pass the batch's ``ClusterDelta`` — the
         assignments, the new remap version, and the batch share the ONE
-        manifest commit, so the map can never drift from the data."""
+        manifest commit, so the map can never drift from the data.
+
+        Each table is written once, with no checkpoint and no count job:
+        uniq straight from ``survivors``, the bands from the written uniq
+        rows, and the map tables in files sized by the delta's row
+        counts.  ``survivors`` and the delta are read here, so call this
+        before `IncrementalResult.release()`."""
         if batch_id in self.manifest["ingested"]:
             raise ValueError(f"batch {batch_id!r} already ingested")
         if self.manifest.get("clusters") and clusters is None:
@@ -729,71 +780,50 @@ class DedupIndex:
             raise ValueError(
                 "index has no cluster map: build(with_clusters=True)"
             )
-        # MATERIALIZE once: the survivors plan scans the committed index
-        # (a corpus-sized read) — without the checkpoint the bands write
-        # would re-run the whole exact+near chain.  (Correctness no longer
-        # depends on this: the new subdirectories are not in any reader's
-        # committed path list until the manifest commit below.)
-        from humid_spark.operators.cc import CheckpointHandle
-
-        rows = (
-            survivors.select("text_hash", "doc_id", "minhash")
-            .localCheckpoint(eager=True)
+        # the new subdirectories are not in any reader's committed path
+        # list until the manifest commit below, so no plan here can read
+        # its own output.  uniq is written straight from survivors (batch
+        # leaves, `dedup_batch`) and the bands derive from the WRITTEN
+        # rows (build's pattern): the survivors plan runs once
+        udir = self._batch_dir(self._uniq_dir(self.root), batch_id)
+        survivors.select("text_hash", "doc_id", "minhash").write.mode(
+            "overwrite"
+        ).parquet(udir)
+        spark = survivors.sparkSession
+        lsh.band_buckets(
+            spark.read.schema(self._UNIQ_SCHEMA).parquet(udir), self.cfg
+        ).write.mode("overwrite").parquet(
+            self._batch_dir(self._bands_dir(self.root), batch_id)
         )
         remap_v = self.manifest.get("remap_v", 0)
-        handles = [CheckpointHandle(rows)]
-        try:
-            rows.write.mode("overwrite").parquet(
-                self._batch_dir(self._uniq_dir(self.root), batch_id)
+        if clusters is not None:
+            # both tables keep their plans' shuffle partitioning (one
+            # small file per partition, 8 at local[4]) for 16 bytes a
+            # row: size the writes by the delta's row counts instead
+            clusters.assignments.coalesce(
+                self._map_files(clusters.assignment_rows)
+            ).write.mode("overwrite").parquet(
+                self._batch_dir(self._clusters_dir(self.root), batch_id)
             )
-            lsh.band_buckets(rows, self.cfg).write.mode(
-                "overwrite"
-            ).parquet(
-                self._batch_dir(self._bands_dir(self.root), batch_id)
-            )
-            n_remap = self.manifest.get("remap_rows", 0)
-            if clusters is not None:
-                # same lazy-self-reference discipline: the delta's plans
-                # READ the committed cluster map and remap version — the
-                # new subdirectory and v-(n+1) are invisible to them, and
-                # the checkpoint pins the rows anyway
-                arows = clusters.assignments.localCheckpoint(eager=True)
-                handles.append(CheckpointHandle(arows))
-                rrows = clusters.remap.localCheckpoint(eager=True)
-                handles.append(CheckpointHandle(rrows))
-                # both tables keep their plans' shuffle partitioning (one
-                # small file per partition, 8 at local[4]) for 16 bytes a
-                # row: size the writes by row count instead
-                arows.coalesce(self._map_files(arows.count())).write.mode(
-                    "overwrite"
-                ).parquet(
-                    self._batch_dir(self._clusters_dir(self.root), batch_id)
-                )
-                # composition only ever ADDS rows (new merges map current
-                # roots, which never appear as old keys), so an unchanged
-                # count means an unchanged table: a merge-free batch
-                # writes no remap version — the empty-remap fast path in
-                # clusters() and compact()'s no-op check stay meaningful
-                n_new = rrows.count()
-                if n_new != n_remap:
-                    rrows.coalesce(self._map_files(n_new)).write.mode(
-                        "overwrite"
-                    ).parquet(
-                        os.path.join(
-                            self._remaps_dir(self.root), f"v-{remap_v + 1}"
-                        )
+            # an unchanged remap row count means an unchanged table
+            # (composition only adds rows, `cluster_batch`): a merge-free
+            # batch writes no remap version — the empty-remap fast path in
+            # clusters() and compact()'s no-op check stay meaningful
+            if clusters.remap_rows != self.manifest.get("remap_rows", 0):
+                clusters.remap.coalesce(
+                    self._map_files(clusters.remap_rows)
+                ).write.mode("overwrite").parquet(
+                    os.path.join(
+                        self._remaps_dir(self.root), f"v-{remap_v + 1}"
                     )
-                n_remap = n_new
-        finally:
-            for h in handles:
-                h.unpersist()
+                )
         self.manifest["batches"].append(batch_id)
         self.manifest["ingested"].append(batch_id)
-        if clusters is not None and n_remap != self.manifest.get(
+        if clusters is not None and clusters.remap_rows != self.manifest.get(
             "remap_rows", 0
         ):
             self.manifest["remap_v"] = remap_v + 1
-            self.manifest["remap_rows"] = n_remap
+            self.manifest["remap_rows"] = clusters.remap_rows
         self._write_manifest(self.root, self.manifest)
 
     def has_batch(self, batch_id: str) -> bool:

@@ -8,6 +8,8 @@ cluster (AQE on, skew-join on, Arrow on, sane shuffle partitioning).
 
 from __future__ import annotations
 
+import hashlib
+import io
 import os
 import tempfile
 import zipfile
@@ -20,16 +22,35 @@ def _package_zip() -> str:
     local-mode equivalent of `spark-submit --py-files humid_spark.zip`
     (north_rule launch shape).  Without it, executors unpickle pandas UDFs
     that reference this module and fail with ModuleNotFoundError whenever
-    the driver wasn't started from the repo root."""
+    the driver wasn't started from the repo root.
+
+    In local mode Spark re-reads the added path when an executor fetches
+    it and refuses a file whose contents changed since the add, so the
+    zip is named by a hash of its bytes (entries sorted, timestamps
+    fixed: the same sources give the same file) and moved into place by
+    os.replace.  Two checkouts sharing a TMPDIR therefore never rewrite
+    each other's zip, and a reader never sees a half-written one."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), "humid_spark_pyfiles.zip")
-    with zipfile.ZipFile(out, "w") as zf:
-        for dirpath, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    zf.write(full, os.path.relpath(full, root))
+    sources = sorted(
+        os.path.join(dirpath, f)
+        for dirpath, _dirs, files in os.walk(pkg_dir)
+        for f in files
+        if f.endswith(".py")
+    )
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for full in sources:
+            with open(full, "rb") as f:
+                zf.writestr(zipfile.ZipInfo(os.path.relpath(full, root)), f.read())
+    data = buf.getvalue()
+    tmpdir = tempfile.gettempdir()
+    digest = hashlib.sha256(data).hexdigest()[:16]
+    out = os.path.join(tmpdir, f"humid_spark_pyfiles-{digest}.zip")
+    fd, tmp = tempfile.mkstemp(prefix="humid_spark_pyfiles-", dir=tmpdir)
+    with os.fdopen(fd, "wb") as f:
+        f.write(data)
+    os.replace(tmp, out)
     return out
 
 

@@ -83,11 +83,10 @@ def stream_ingest(
                 os.path.join(base, "batch_pairs")
             )
             # the append below ingests the WRITTEN assignments — the
-            # survivors discipline (index == sink, plan executed once)
+            # survivors discipline (index == sink)
             delta.assignments = batch_df.sparkSession.read.parquet(cpath)
         # append from the WRITTEN table: the index ingests exactly what
-        # the sink holds, and the survivors plan (a corpus-sized index
-        # scan chain) is not executed a second time
+        # the sink holds
         index.append(
             batch_df.sparkSession.read.parquet(surv_path), bid,
             clusters=delta,

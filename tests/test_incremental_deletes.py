@@ -110,15 +110,16 @@ def test_tombstoned_index_still_never_shuffles(didx, spark):
     BroadcastExchange (it is batch-bounded by design), so this pin allows
     broadcasts and forbids exactly the scale-killer: a shuffle between
     any such scan and its join."""
-    from tests.test_incremental_index import _plan_nodes
+    from tests.test_incremental_index import _executed_plans, _tree_nodes
 
     didx.delete(spark.createDataFrame([("http://d/base",)], "url string"))
-    res = didx.dedup_batch(
-        _pages(spark, [("http://f/x", OTHER + " tail"), ("http://f/y", BASE)])
+    batch = _pages(
+        spark, [("http://f/x", OTHER + " tail"), ("http://f/y", BASE)]
     )
+    res, plans = _executed_plans(spark, lambda: didx.dedup_batch(batch))
     import re
 
-    nodes = _plan_nodes(res.survivors)
+    nodes = _tree_nodes(*plans)
     found = 0
     for i, (d, t) in enumerate(nodes):
         m = re.search(r"FileScan parquet .*?ReadSchema: struct<([^\n]*)", t)

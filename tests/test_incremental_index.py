@@ -132,22 +132,74 @@ def test_batch_classification_and_append_convergence(index, spark):
 def test_batch_plans_are_equi_join_shaped(index, spark):
     """The incremental tier must never degrade to a cross join: the exact
     tier is a hash anti-join, the near tier an equi-join on
-    (band, bucket[, salt]) — same hygiene bar as the driver contract."""
+    (band, bucket[, salt]) — same hygiene bar as the driver contract.
+    Checked on the plans dedup_batch executes and on the result frames'
+    own plans (what a later action on them runs)."""
     batch = _pages(spark, [("http://c/x", BASE + " tail"), ("http://c/y", OTHER)])
-    res = index.dedup_batch(batch)
+    res, plans = _executed_plans(spark, lambda: index.dedup_batch(batch))
+    assert plans
     for df in (res.survivors, res.near_pairs, res.exact_hits, res.demoted):
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+    for plan in plans:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoop" not in plan
     res.release()
+
+
+def _executed_plans(spark, action):
+    """Run ``action`` and return (its result, the final executed plan of
+    every SQL execution it ran).  dedup_batch materializes its tables
+    with eager checkpoints, so the index scans live in the plans of
+    those jobs, not in the result frames: the plans are read back from
+    Spark's SQL status store (kept with the UI off), in the tree format
+    of ``executedPlan().toString()``; an adaptive plan contributes its
+    final plan."""
+    import textwrap
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def recent():
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        execs = store.executionsList(max(0, n - 200), 200)
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = max((e.executionId() for e in recent()), default=-1)
+    mode = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "simple")
+    try:
+        out = action()
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", mode)
+    plans = []
+    for e in sorted(recent(), key=lambda e: e.executionId()):
+        if e.executionId() <= last:
+            continue
+        plan = e.physicalPlanDescription().split("== Physical Plan ==\n", 1)[-1]
+        # split at the top level only: cached subplans nest their own
+        final, _, initial = plan.partition("\n+- == Initial Plan ==\n")
+        # a plan whose stages came back empty is cut to an EmptyRelation
+        # that no longer lists the stages it ran: those are the initial
+        # plan's
+        plans.append(
+            textwrap.dedent(initial) if "EmptyRelation" in final else final
+        )
+    return out, plans
 
 
 def _plan_nodes(df):
     """(depth, text) per line of the executed plan — depth is the column
     where the node text starts, so an ancestor is the nearest line above
     with a smaller depth."""
+    return _tree_nodes(df._jdf.queryExecution().executedPlan().toString())
+
+
+def _tree_nodes(*plans):
+    """`_plan_nodes` over plan strings, concatenated: each plan's root
+    sits at depth 0, so no ancestor walk crosses into another plan."""
     nodes = []
-    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+    for line in "\n".join(plans).splitlines():
         stripped = line.lstrip(" :+-")
         if stripped:
             nodes.append((len(line) - len(stripped), stripped))
@@ -189,8 +241,8 @@ def test_index_side_never_shuffles(index, spark):
     batch = _pages(
         spark, [("http://e/x", BASE + " tail"), ("http://e/y", OTHER)]
     )
-    res = index.dedup_batch(batch)
-    nodes = _plan_nodes(res.survivors)
+    res, plans = _executed_plans(spark, lambda: index.dedup_batch(batch))
+    nodes = _tree_nodes(*plans)
     _assert_scan_joins_unexchanged(
         nodes,
         lambda s: s.startswith("text_hash:bigint") and "minhash" not in s,
@@ -218,8 +270,8 @@ def test_index_scans_are_column_pruned(index, spark):
     import re
 
     batch = _pages(spark, [("http://d/x", BASE + " v2"), ("http://d/y", OTHER)])
-    res = index.dedup_batch(batch)
-    plan = res.survivors._jdf.queryExecution().executedPlan().toString()
+    res, plans = _executed_plans(spark, lambda: index.dedup_batch(batch))
+    plan = "\n".join(plans)
     # location strings are truncated in plan dumps, so classify parquet
     # scans by their read schema (uniq: text_hash/minhash; bands: band)
     scans = [
@@ -227,7 +279,7 @@ def test_index_scans_are_column_pruned(index, spark):
         for m in re.finditer(
             r"FileScan parquet [^\n]*?ReadSchema: struct<([^\n]*)", plan)
     ]
-    assert scans, "no parquet scans found in the survivors plan"
+    assert scans, "no parquet scans found in dedup_batch's plans"
     sig_scans = [s for s in scans if "minhash" in s]
     assert len(sig_scans) == 1
     assert sig_scans[0].startswith("doc_id:bigint,minhash:array<int")

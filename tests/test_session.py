@@ -52,3 +52,87 @@ def test_driver_memory_follows_host_ram(monkeypatch, tmp_path):
     assert r(str(tmp_path / "missing")) == "24g"
     monkeypatch.setenv("SPARK_DRIVER_MEM", "6g")
     assert r(meminfo(16_000_000)) == "6g"
+
+
+_ZIP_SESSION = r'''
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql.functions import udf
+from humid_spark.session import get_spark
+
+spark = get_spark("zip-clash", cores=1)
+if sys.argv[2] == "wait":
+    print("READY", flush=True)
+    sys.stdin.readline()
+
+@udf("string")
+def package_file(_):
+    import humid_spark
+    return humid_spark.__file__
+
+print("WORKER", spark.range(1).select(package_file("id")).first()[0], flush=True)
+spark.stop()
+'''
+
+
+def test_sessions_from_two_trees_share_tmpdir(tmp_path):
+    """Two checkouts whose packages differ by one comment line run one
+    session each against a shared TMPDIR.  Tree A's session adds its zip
+    before tree B's session starts and runs its first task after B's
+    session has come and gone — the window in which a zip written to a
+    fixed path would have changed under A ("exists and does not match
+    contents").  Both sessions must run, each on its own package."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    import humid_spark
+
+    src = os.path.dirname(os.path.abspath(humid_spark.__file__))
+    trees = {}
+    for name in ("a", "b"):
+        trees[name] = tmp_path / name
+        shutil.copytree(
+            src, trees[name] / "humid_spark",
+            ignore=shutil.ignore_patterns("__pycache__"),
+        )
+    with open(trees["b"] / "humid_spark" / "config.py", "a") as f:
+        f.write("# tree b\n")
+    shared = tmp_path / "tmp"
+    shared.mkdir()
+    env = dict(
+        os.environ, TMPDIR=str(shared), SPARK_GRAFT_NO_PREWARM="1",
+        SPARK_DRIVER_MEM="1g",
+    )
+
+    def session(tree, mode, err, **kw):
+        return subprocess.Popen(
+            [sys.executable, "-c", _ZIP_SESSION, str(tree), mode],
+            cwd=tmp_path, env=env, stdout=subprocess.PIPE, stderr=err,
+            text=True, **kw,
+        )
+
+    with open(tmp_path / "wait.err", "w") as a_err, \
+            open(tmp_path / "run.err", "w") as b_err:
+        a = session(trees["a"], "wait", a_err, stdin=subprocess.PIPE)
+        try:
+            assert a.stdout.readline().strip() == "READY"
+            b_out, _ = session(trees["b"], "run", b_err).communicate(
+                timeout=300
+            )
+            a_out, _ = a.communicate("go\n", timeout=300)
+        finally:
+            a.kill()
+
+    def worker_zip(out, mode):
+        lines = [ln for ln in out.splitlines() if ln.startswith("WORKER")]
+        err = (tmp_path / f"{mode}.err").read_text()
+        assert lines, f"session {mode} ran no job:\n{err[-3000:]}"
+        path = lines[0].split()[1]
+        return os.path.basename(path.split(os.sep + "humid_spark" + os.sep)[0])
+
+    za, zb = worker_zip(a_out, "wait"), worker_zip(b_out, "run")
+    assert za != zb
+    zips = [f for f in os.listdir(shared) if f.startswith("humid_spark_")]
+    assert sorted(zips) == sorted([za, zb])
