@@ -119,12 +119,6 @@ SELECT key, min(comp) AS component FROM reach GROUP BY key
 """
 
 
-_SQL_KEYS = _sql_keys(N)
-_SQL_UNIQ = _sql_uniq(N)
-_SQL_EDGES_H1 = _sql_edges_h1(N)
-_SQL_CC = _sql_cc(N)
-
-
 def _pairs_h1(spark: SparkSession, sf_dir: str, n: int = N) -> DataFrame:
     from humid_spark.operators.blocking import hamming_pairs
 
@@ -227,12 +221,7 @@ _AUD_STATS_COLS = [
     "decoded", "n_channels", "sample_rate", "n_samples",
     "duration_ms", "sumsq", "zero_crossings",
 ]
-_VID_STATS_COLS = [
-    "decoded", "width", "height", "n_frames", "fps_num", "fps_den",
-    "duration_ms", "y_sum", "y_sumsq",
-]
 _IMG_RESIZE_COLS = ["width", "height", "r_sum", "g_sum", "b_sum"]
-_VID_RESIZE_COLS = ["width", "height", "n_frames", "fps_num", "y_sum"]
 
 
 def _unpivot_modal(df: DataFrame, modality: str, metrics: list[str]) -> DataFrame:
@@ -276,17 +265,6 @@ def entry(spark: SparkSession) -> DataFrame:
             "doc_id",
             F.coalesce(F.col("component"), F.lit("")).alias("cluster"),
         )
-    )
-
-
-def _best(c: DataFrame) -> DataFrame:
-    """Per-component argmax representative (max count, tie: min key).
-    min(struct(-cnt, key)) is an exact argmax with deterministic tie-break,
-    computed as one hash aggregate (no window, no extra shuffle)."""
-    return c.groupBy("component").agg(
-        F.min(
-            F.struct((-F.col("cnt")).alias("neg_cnt"), F.col("key").alias("key"))
-        ).alias("b")
     )
 
 
@@ -579,8 +557,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #       total_usable -> exact_removed -> near_removed -> kept.
     #     The corpus has no full-text dups, so exact dups are PLANTED
     #     (doc_id % 10 == 0 re-enters as -doc_id - 1 — disjoint from the
-    #     non-negative ids at any scale factor, the embedding_near_dups
-    #     convention).  The DuckDB oracle replays the whole chain —
+    #     non-negative ids at any scale factor).  The DuckDB oracle replays the whole chain —
     #     grouping, md5-parity signatures, banding, Jaccard >= 0.5,
     #     recursive-CTE components — so CC-over-DOCUMENT-PAIRS is
     #     hash-checked end to end (previously only CC-over-parity-keys
@@ -1418,211 +1395,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["simhash_near_dups"] = simhash_pairs_q
 
-    # --- similarity search: exact brute-force cosine top-k (strict
-    #     left-to-right double summation -> engine-reproducible ranks) ---
-    def ann_topk(s, d):
-        from humid_spark.operators.ann import cosine_topk
-
-        emb = _t(s, d, "embeddings")
-        return cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-    q["ann_cosine_topk"] = ann_topk
-
-    # --- similarity search: hyperplane-sketch blocked ANN (scale path;
-    #     approximate -> rows-only check, recall pinned in pytest) ---
-    def ann_lsh(s, d):
-        from humid_spark.operators.ann import hyperplane_topk
-
-        emb = _t(s, d, "embeddings")
-        # dim is derived executor-side from the batches themselves —
-        # building this query issues NO driver action (VERDICT r2 item 7)
-        return hyperplane_topk(emb, emb.filter(F.col("vec_id") < 5), k=10)
-
-    q["ann_hyperplane_topk"] = ann_lsh
-
-    # --- SRP-LSH with INTEGER planes (VERDICT r4 item 4): same blocking
-    #     machinery, but the sketch is splitmix64-derived int64 math, so
-    #     the DuckDB oracle replays sketch -> (table, bucket) equi-join ->
-    #     exact rerank bit-identically.  The gaussian variant above stays
-    #     rows-only (float planes aren't SQL-replayable); with this query
-    #     the MACHINERY is hash-checked and only recall — inherent to any
-    #     LSH — remains approximate. ---
-    def ann_lsh_int(s, d):
-        from humid_spark.operators.ann import hyperplane_topk
-
-        emb = _t(s, d, "embeddings")
-        return hyperplane_topk(emb, emb.filter(F.col("vec_id") < 5), k=10,
-                               integer_planes=True)
-
-    q["ann_hyperplane_int"] = ann_lsh_int
-
-    # --- similarity search: IVF (spherical-kmeans inverted lists; the
-    #     clustered-data scale path; approximate -> rows-only check,
-    #     recall + full-probe-exactness pinned in tests/test_ann.py) ---
-    def ann_ivf(s, d):
-        from humid_spark.operators.ann import ivf_topk
-
-        emb = _t(s, d, "embeddings")
-        return ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10,
-                        n_centroids=32, n_probe=8)
-
-    q["ann_ivf_topk"] = ann_ivf
-
-    # --- IVF with n_probe == n_centroids: every query probes every cell,
-    #     so the cell-assignment + candidate equi-join + rerank machinery
-    #     runs in full yet the result is EXACTLY brute-force cosine top-k
-    #     — which has a DuckDB oracle.  Hash-matches the IVF plumbing;
-    #     only the probe-subset selection stays rows-only (ann_ivf_topk).
-    def ann_ivf_full(s, d):
-        from humid_spark.operators.ann import ivf_topk
-
-        emb = _t(s, d, "embeddings")
-        return ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=10,
-                        n_centroids=32, n_probe=32)
-
-    q["ann_ivf_full_probe"] = ann_ivf_full
-
-    # --- embedding-cosine near-dup dedup: ALL-INTEGER hyperplane SimHash
-    #     (quantized embeddings x splitmix64-derived integer planes) ->
-    #     band-blocked hamming filter -> exact cosine verify.  The sf
-    #     corpus is near-orthogonal (max cos ~0.51), so the queries PLANT
-    #     deterministic near-dups inline — vec_id < 100 re-enters with
-    #     dims d % 7 == 0 scaled by 1.08 (cos ~0.9995) and the NEGATED id
-    #     -vec_id - 1, which is disjoint from the non-negative corpus ids
-    #     at ANY scale factor (ADVICE r4: a fixed +1000000 offset collides
-    #     once the corpus holds >= 1M embeddings) — with the oracle
-    #     replaying the identical construction; the pair set is then
-    #     hash-checked end to end (operators/embdedup.py docstring has the
-    #     integer-reproducibility argument).
-    #     Two variants: the 16-bit/4-band/hamming<=3 config is
-    #     pigeonhole-EXHAUSTIVE, so its oracle is cheap brute-force
-    #     hamming; the library-DEFAULT config (60-bit/15-bit bands,
-    #     the scale-safe widths) is probabilistic, so its oracle replays
-    #     the BANDING itself — both hash-checked. ---
-    def _emb_planted(s, d):
-        emb = _t(s, d, "embeddings")
-        base = emb.select(
-            "vec_id",
-            F.transform(F.col("embedding"),
-                        lambda x: x.cast("double")).alias("embedding"),
-        )
-        pert = emb.filter(F.col("vec_id") < 100).select(
-            (-F.col("vec_id") - 1).alias("vec_id"),
-            F.transform(
-                F.col("embedding"),
-                lambda x, i: x.cast("double")
-                * F.when(i % 7 == 0, F.lit(1.08)).otherwise(F.lit(1.0)),
-            ).alias("embedding"),
-        )
-        return base.unionByName(pert)
-
-    def emb_near_dups(s, d):
-        """Round-6 fold of embedding_near_dups + embedding_near_dups_wide
-        (one recorded row, both configs hash-checked): mode 'bf16' is the
-        16-bit/4-band/max_bits=3 pigeonhole-exhaustive config (oracle =
-        brute-force hamming), mode 'wide60' is the library default
-        (60-bit/15-bit bands, oracle replays the banding itself)."""
-        from humid_spark.operators.embdedup import embedding_near_dup_pairs
-
-        base = _emb_planted(s, d)
-
-        def tagged(mode, **kw):
-            return embedding_near_dup_pairs(
-                base, cos_threshold=0.99, **kw
-            ).select(
-                F.lit(mode).alias("mode"), "src", "dst",
-                F.col("bit_dist").cast("long").alias("bit_dist"),
-                "cos_permille",
-            )
-
-        return tagged("bf16", bits=16, n_bands=4, max_bits=3).unionByName(
-            tagged("wide60")
-        )
-
-    q["embedding_near_dups"] = emb_near_dups
-
-    def emb_incremental(s, d):
-        """Incremental tier for EMBEDDINGS: a batch of vectors
-        (vec_id % 3 == 0, plus perturbed re-entries of index vectors)
-        deduplicates against the already-ingested index (vec_id % 3 != 0)
-        — integer SimHash signatures, the asymmetric cross_band_pairs
-        join (one-sided index caps/salting), hamming <= 3 over 4 four-bit
-        bands (pigeonhole-exhaustive, so the brute-force batch-x-index
-        SQL is the exact pair set), exact-cosine verify at 0.99."""
-        from humid_spark.functions.signatures import hamming64
-        from humid_spark.operators.ann import _norm, dot_double
-        from humid_spark.operators.embdedup import embedding_simhash_udf
-        from humid_spark.operators.incremental import cross_band_pairs
-
-        emb = _t(s, d, "embeddings")
-        dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        base = emb.select("vec_id", dbl.alias("v"))
-        pert = emb.filter(
-            (F.col("vec_id") % 3 != 0) & (F.col("vec_id") % 10 == 1)
-        ).select(
-            (-F.col("vec_id") - 1).alias("vec_id"),
-            F.transform(
-                F.col("embedding"),
-                lambda x, i: x.cast("double")
-                * F.when(i % 7 == 0, F.lit(1.08)).otherwise(F.lit(1.0)),
-            ).alias("v"),
-        )
-        corpus = base.unionByName(pert)
-        bits, n_bands, max_bits = 16, 4, 3
-        sigs = corpus.select(
-            "vec_id", "v",
-            embedding_simhash_udf(bits, 1)(F.col("v")).alias("esig"),
-        ).localCheckpoint(eager=True)
-        width = bits // n_bands
-
-        def bands_of(df):
-            arr = F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned(F.col("esig"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-            return df.select(
-                F.col("vec_id").alias("doc_id"), F.explode(arr).alias("bb")
-            ).select("doc_id", "bb.band", "bb.bucket")
-
-        is_batch = (F.col("vec_id") < 0) | (F.col("vec_id") % 3 == 0)
-        cand = cross_band_pairs(
-            bands_of(sigs.filter(is_batch)),
-            bands_of(sigs.filter(~is_batch)),
-            bucket_cap=200000,  # 16 buckets/band at 4-bit widths: sf0.01
-                                # never caps; real corpora use wide bands
-        )
-        av = sigs.select(F.col("vec_id").alias("src"),
-                         F.col("v").alias("av"),
-                         F.col("esig").alias("sa"))
-        bv = sigs.select(F.col("vec_id").alias("dst"),
-                         F.col("v").alias("bv"),
-                         F.col("esig").alias("sb"))
-        cos = dot_double(F.col("av"), F.col("bv")) / (
-            _norm(F.col("av")) * _norm(F.col("bv"))
-        )
-        return (
-            cand.join(av, "src").join(bv, "dst")
-            .withColumn("bit_dist",
-                        hamming64(F.col("sa"), F.col("sb")).cast("long"))
-            .filter(F.col("bit_dist") <= max_bits)
-            .withColumn("cos", cos)
-            .filter(F.col("cos") >= F.lit(0.99))
-            .select(
-                "src", "dst", "bit_dist",
-                F.floor(F.col("cos") * 1000 + F.lit(0.5))
-                .cast("long").alias("cos_permille"),
-            )
-        )
-
-    q["incremental_embedding_dedup"] = emb_incremental
-
     # --- containment/substring dups: winnowing fingerprints (batched
     #     numpy UDF; oracle-checked — the full winnowing pass is
     #     re-expressed in DuckDB list ops, see oracle_sql) ---
@@ -1944,191 +1716,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         )
 
 
-    # --- video (round 5): REAL Y4M decode + exact luma stats.  Planted
-    #     mono YUV4MPEG2 streams (pixel = (doc_id*53 + t*17 + y*7 + x*3)
-    #     % 200 over 16x16 frames, n_frames = 4 + doc_id%4, fps
-    #     12 + doc_id%3) go through the stdlib stream parser
-    #     (functions/video.py); the oracle recomputes frame count,
-    #     duration and the luma sum/sum-of-squares straight from the
-    #     formula — a parser that misreads the header, drops frames or
-    #     mis-offsets planes hash-mismatches. ---
-    def video_decode_stats(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.video import encode_y4m, video_stats
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 150
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    n = 4 + did % 4
-                    t, y, x = _np.meshgrid(
-                        _np.arange(n), _np.arange(16), _np.arange(16),
-                        indexing="ij",
-                    )
-                    f = ((did * 53 + t * 17 + y * 7 + x * 3) % 200
-                         ).astype(_np.uint8)
-                    rows.append(
-                        (str(did), encode_y4m(f, fps=(12 + did % 3, 1)))
-                    )
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        return video_stats(planted, blob_col="blob")
-
-
-    # --- perceptual video dedup (round 5): the same planting formula
-    #     at fixed n_frames=6 plus brightness-shifted copies (+8 every
-    #     luma sample, id 's<doc_id>') flows through the REAL chain —
-    #     Y4M decode -> frame-sample every 2nd frame (t = 0,2,4) ->
-    #     per-frame 64-bit aHash -> majority-combined video signature
-    #     -> the capped SimHash band join.  max_bits=3 < n_bands=4
-    #     keeps blocking pigeonhole-EXHAUSTIVE, so the oracle replays
-    #     the sampled-frame aHashes from the formula (HUGEINT), takes
-    #     the per-bit 2-of-3 majority, packs with the signed int64
-    #     wrap, and brute-forces hamming <= 3. ---
-    def video_phash_near_dups(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.video import encode_y4m, video_near_dups
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 80
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    t, y, x = _np.meshgrid(
-                        _np.arange(6), _np.arange(16), _np.arange(16),
-                        indexing="ij",
-                    )
-                    f = ((did * 53 + t * 17 + y * 7 + x * 3) % 200
-                         ).astype(_np.uint8)
-                    rows.append((str(did), encode_y4m(f)))
-                    if did % 5 == 0:
-                        rows.append(("s" + str(did), encode_y4m(f + 8)))
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        return video_near_dups(planted, blob_col="blob", every=2).withColumn(
-            "bit_dist", F.col("bit_dist").cast("long")
-        )
-
-
-    # --- video sub-clip containment (round 5): base videos from the
-    #     same luma formula at n = 8 + doc_id%4 frames; for doc_id%4==0
-    #     a re-posted CLIP (frames 2..7 cut contiguously, id
-    #     'c<doc_id>') re-enters.  The chain is decode -> per-frame
-    #     aHash -> k-gram Horner hash (base 1000003, exact uint64
-    #     wraparound) -> window-min winnow (k=3, w=4) -> the text
-    #     containment backend (capped inverted fp index, post-cap
-    #     sizes).  Clips score share_permille exactly 1000 by the
-    #     winnowing subset property.  The oracle replays every step in
-    #     HUGEINT mod-2^64 arithmetic — frame hashes from the pixel
-    #     formula (the clip's frame j is the base's frame j+2), Horner
-    #     grams via lead(), window mins, DISTINCT fingerprints, and
-    #     the share join. ---
-    def video_subclip_containment(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.video import (
-            encode_y4m,
-            video_subclip_pairs,
-        )
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 40
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    n = 8 + did % 4
-                    t, y, x = _np.meshgrid(
-                        _np.arange(n), _np.arange(16), _np.arange(16),
-                        indexing="ij",
-                    )
-                    f = ((did * 53 + t * 17 + y * 7 + x * 3) % 200
-                         ).astype(_np.uint8)
-                    rows.append((str(did), encode_y4m(f)))
-                    if did % 4 == 0:
-                        rows.append(("c" + str(did), encode_y4m(f[2:8])))
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        return video_subclip_pairs(planted, blob_col="blob")
-
-    q["video_subclip_containment"] = video_subclip_containment
-
-    # --- video resize round-trip (round 5): the planted videos resize
-    #     to 8x8 per frame (luma block mean, floor division), sampling
-    #     every 2nd frame, re-encode as mono Y4M, and ROUND-TRIP
-    #     through the engine's own stream parser into luma sums — the
-    #     video analog of image_resize_stats.  Oracle: sum over output
-    #     pixels of floor(2x2-block sum / 4) for t in (0, 2, ...). ---
-    def video_resize_stats(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.video import encode_y4m, video_resize, video_stats
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 100
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    n = 4 + did % 4
-                    t, y, x = _np.meshgrid(
-                        _np.arange(n), _np.arange(16), _np.arange(16),
-                        indexing="ij",
-                    )
-                    f = ((did * 53 + t * 17 + y * 7 + x * 3) % 200
-                         ).astype(_np.uint8)
-                    rows.append(
-                        (str(did), encode_y4m(f, fps=(12 + did % 3, 1)))
-                    )
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        resized = video_resize(planted, out_w=8, out_h=8, every=2,
-                               blob_col="blob")
-        return video_stats(resized, blob_col="resized").select(
-            "url", "width", "height", "n_frames", "fps_num", "y_sum"
-        )
-
     # --- round-6 folds: the whole perceptual tier in THREE recorded
     #     queries (decode / near-dup / resize), every per-modality column
-    #     preserved as a long-form metric row.  All three real codec
-    #     paths (PPM/WAV/Y4M), all three fingerprint kernels (aHash /
-    #     energy envelope / frame-majority aHash) and both resize paths
-    #     still run — only the row shape changed. ---
+    #     preserved as a long-form metric row.  Both real codec paths
+    #     (PPM+JPEG/WAV), both fingerprint kernels (aHash / energy
+    #     envelope) and the image resize path run — only the row shape
+    #     changed. ---
     def multimodal_decode_stats(s, d):
         return (
             _unpivot_modal(image_decode_stats(s, d), "image", _IMG_STATS_COLS)
             .unionByName(
                 _unpivot_modal(audio_decode_stats(s, d), "audio",
                                _AUD_STATS_COLS)
-            )
-            .unionByName(
-                _unpivot_modal(video_decode_stats(s, d), "video",
-                               _VID_STATS_COLS)
             )
         )
 
@@ -2143,7 +1742,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return (
             tag(image_phash_near_dups(s, d), "image")
             .unionByName(tag(audio_fp_near_dups(s, d), "audio"))
-            .unionByName(tag(video_phash_near_dups(s, d), "video"))
         )
 
     q["multimodal_near_dups"] = multimodal_near_dups
@@ -2151,40 +1749,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def multimodal_resize_stats(s, d):
         return _unpivot_modal(
             image_resize_stats(s, d), "image", _IMG_RESIZE_COLS
-        ).unionByName(
-            _unpivot_modal(video_resize_stats(s, d), "video",
-                           _VID_RESIZE_COLS)
         )
 
     q["multimodal_resize_stats"] = multimodal_resize_stats
-
-    # --- streaming dedup, batch-mode analog: the Structured-Streaming
-    #     operator (dropDuplicatesWithinWatermark, streaming/dedup.py)
-    #     keeps the first event per key per time window; the bounded-batch
-    #     equivalent is first-per-(key, tumbling-window), which DuckDB can
-    #     check exactly. ---
-    def events_dedup(s, d):
-        e = _t(s, d, "events")
-        es = F.col("ts").cast("timestamp").cast("long")
-        win = F.floor(es / 600).cast("long")
-        return (
-            e.withColumn("es", es)
-            .withColumn("win", win)
-            .groupBy("user_id", "event_type", "win")
-            .agg(
-                F.min(
-                    F.struct(F.col("es").alias("es"), F.col("event_id").alias("eid"))
-                ).alias("first"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .select(
-                "user_id", "event_type", "win",
-                F.col("first.eid").alias("keep_event_id"),
-                "n_events",
-            )
-        )
-
-    q["events_dedup_windowed"] = events_dedup
 
     # --- exact substring duplicates (the north-star's suffix-array pass;
     #     winnowing-candidate + contains() verify, recall-1 argument in
@@ -2207,94 +1774,26 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["substring_dups"] = substring_q
 
-    # --- REAL end-to-end Structured Streaming run (round-2 VERDICT item
-    #     6): the events table is split into four (ts, url)-ordered files,
-    #     replayed as micro-batches (maxFilesPerTrigger=1, availableNow)
-    #     through the CUSTOM applyInPandasWithState operator
-    #     (streaming/dedup.py stateful_first_seen), and the memory-sink
-    #     result is returned for the DuckDB oracle.  Because the file
-    #     split is ordered by (warc_ts, url), the first micro-batch that
-    #     contains a fingerprint also contains its global minimum row, so
-    #     the emitted set equals the batch-expressible "first row per
-    #     fingerprint" regardless of how state spreads across batches
-    #     (n_dups IS split-dependent, so it is not part of the checked
-    #     output — its cross-batch counter semantics are pinned in
-    #     tests/test_multimodal_streaming.py). ---
-    def streaming_first_seen_q(s, d):
-        import os
-        import tempfile
-        import uuid
-
-        from pyspark.sql import Window
-
-        from humid_spark.streaming.dedup import stateful_first_seen
-
-        ev = _t(s, d, "events").select(
-            F.col("event_id").cast("string").alias("url"),
-            F.col("ts").cast("timestamp").alias("warc_ts"),
-            F.col("props").alias("text"),
-        )
-        tmp = tempfile.mkdtemp(prefix="hs_stream_")
-        data_dir = os.path.join(tmp, "data")
-        os.makedirs(data_dir)
-        tiles = ev.withColumn(
-            "tile", F.ntile(4).over(Window.orderBy("warc_ts", "url"))
-        )
-        for t in range(1, 5):
-            stage = os.path.join(tmp, f"stage{t}")
-            (tiles.filter(F.col("tile") == t).drop("tile")
-             .coalesce(1).write.mode("overwrite").parquet(stage))
-            part = next(p for p in os.listdir(stage)
-                        if p.endswith(".parquet"))
-            dst = os.path.join(data_dir, f"batch{t}.parquet")
-            os.rename(os.path.join(stage, part), dst)
-            os.utime(dst, (1_700_000_000 + t, 1_700_000_000 + t))
-        stream = (
-            s.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(data_dir)
-        )
-        sink = f"first_seen_{uuid.uuid4().hex[:8]}"
-        query = (
-            stateful_first_seen(stream)
-            .writeStream.format("memory").queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-        return s.table(sink).select("fp", "url", "warc_ts")
-
-    q["streaming_first_seen"] = streaming_first_seen_q
-
     missing = [k for k in _ORDER if k not in q]
     extra = [k for k in q if k not in _ORDER]
     assert not missing and not extra, (missing, extra)
     return {k: q[k] for k in _ORDER}
 
 
-# The driver records the FIRST 50 registered queries (registration order =
-# this list).  Round 6 (VERDICT r5 item 1): never-driver-checked queries
-# lead, the 8 queries that overflowed r5's record follow, and the single
-# over-budget query (#51, ann_ivf_topk) is a documented approximate
-# operator whose exact twin (ann_ivf_full_probe) IS recorded — see README
-# "Contract v6".
+# Registration order of the 42 queries; all of them fit the first-50
+# record.
 _ORDER = [
-    # never driver-checked before round 6 — recorded first
+    # perceptual tier (image/audio decode, near-dup and resize folds)
     "multimodal_decode_stats",
     "multimodal_near_dups",
     "multimodal_resize_stats",
-    "video_subclip_containment",
-    "incremental_embedding_dedup",
-    # absent from the r5 record (registry overflow) — restored
+    # binary exact dedup, containment, substring and
+    # directional-clustering checks
     "binary_exact_dups",
     "containment_pairs",
     "substring_dups",
     "directional_clusters",
     "directional_invariants_n12",
-    "events_dedup_windowed",
-    "streaming_first_seen",
     # n=24 reference-config dedup chain (folded, see _register_dedup_chain)
     "exact_dup_counts", "neighbour_pairs", "dedup_histograms",
     "components", "representatives", "annotate",
@@ -2313,13 +1812,6 @@ _ORDER = [
     "decontaminate", "pii_scrub_stats",
     # relational coverage (agg / join / window)
     "pricing_summary", "top_customers", "events_daily", "user_sessions",
-    # embeddings / ANN (embedding_near_dups carries bf16 + wide60 modes —
-    # round-6 fold of the former embedding_near_dups_wide row)
-    "embedding_near_dups",
-    "ann_cosine_topk", "ann_hyperplane_int", "ann_ivf_full_probe",
-    # documented-approximate tail (pytest recall + exact twins above)
-    "ann_hyperplane_topk",
-    "ann_ivf_topk",
 ]
 
 
@@ -2588,22 +2080,6 @@ def oracle_sql() -> dict[str, str]:
         f"count(*) AS n FROM documents GROUP BY 2"
     )
 
-    # streaming_first_seen: the streamed result equals "first (ts, url)
-    # row per props-fingerprint" because the micro-batch file split is
-    # (ts, url)-ordered (see queries()) — batch-expressible exactly.
-    _ev_fp = __import__(
-        "humid_spark.functions.textstats", fromlist=["sql_fingerprint"]
-    ).sql_fingerprint("props")
-    o["streaming_first_seen"] = f"""
-        SELECT fp, url, warc_ts FROM (
-          SELECT {_ev_fp} AS fp,
-                 CAST(event_id AS VARCHAR) AS url, ts AS warc_ts,
-                 row_number() OVER (PARTITION BY {_ev_fp}
-                                    ORDER BY ts, CAST(event_id AS VARCHAR)) AS rn
-          FROM events)
-        WHERE rn = 1
-    """
-
     o["fingerprint_exact_dups"] = (
         f"SELECT {ts.sql_fingerprint('text')} AS fp, count(*) AS n, "
         f"min(doc_id) AS keep_doc_id FROM documents GROUP BY 1"
@@ -2828,243 +2304,6 @@ def oracle_sql() -> dict[str, str]:
         SELECT user_id, count(*) AS n_events,
                CAST(sum(new_sess) AS BIGINT) AS n_sessions
         FROM x GROUP BY user_id
-    """
-
-    o["ann_cosine_topk"] = """
-        WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < 5),
-        dots AS (
-          SELECT q.vec_id AS qid, e.vec_id AS cid,
-            list_sum(list_transform(generate_series(1, len(e.embedding)),
-              i -> CAST(q.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) AS dot,
-            sqrt(list_sum(list_transform(generate_series(1, len(q.embedding)),
-              i -> CAST(q.embedding[i] AS DOUBLE) * CAST(q.embedding[i] AS DOUBLE)))) AS qn,
-            sqrt(list_sum(list_transform(generate_series(1, len(e.embedding)),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE)))) AS cn
-          FROM embeddings e, q WHERE e.vec_id <> q.vec_id
-        ),
-        r AS (SELECT qid, cid,
-                     row_number() OVER (PARTITION BY qid
-                                        ORDER BY dot / (qn * cn) DESC, cid) AS rank
-              FROM dots)
-        SELECT qid, cid, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 10
-    """
-
-    # IVF at n_probe == n_centroids degenerates to exact brute-force cosine
-    # (every cell probed), so the full-probe query shares the exact oracle —
-    # hash-matching the cell-assign/equi-join/rerank machinery end to end.
-    o["ann_ivf_full_probe"] = o["ann_cosine_topk"]
-
-    # --- ann_hyperplane_int: the INTEGER SRP sketch is exact int64 math
-    #     (quantize -> int plane dots -> packed sign-bit buckets), so the
-    #     sketch AND the (table, bucket) candidate equi-join replay
-    #     bit-identically in DuckDB; the rerank reuses the strict
-    #     left-to-right double scoring the exact ANN oracle already
-    #     hash-matches.  Dim fixed at 64 (the driver embeddings table);
-    #     defaults n_tables=16, bits=8, seed=42. ---
-    from humid_spark.functions.signatures import mix64_duckdb as _mx
-    from humid_spark.operators.embdedup import QUANT as _Q
-    from humid_spark.operators.embdedup import WEIGHT_MOD as _WM
-
-    _srp_mix = _mx("(42 * 4294967296::HUGEINT + i)")
-    o["ann_hyperplane_int"] = f"""
-        WITH ve AS (
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings
-        ),
-        qt AS (
-          SELECT vec_id,
-            list_transform(v, x -> CAST(floor(x * {_Q}.0 + 0.5) AS BIGINT)) AS qv
-          FROM ve
-        ),
-        planes AS (
-          SELECT i // 64 AS p, i % 64 AS d,
-            CAST(({_srp_mix}) % {_WM} AS BIGINT) - {_WM // 2} AS w
-          FROM (SELECT unnest(generate_series(0, {16 * 8 * 64 - 1})) AS i)
-        ),
-        dots AS (
-          SELECT qt.vec_id, planes.p, sum(qt.qv[planes.d + 1] * planes.w) AS dot
-          FROM qt, planes GROUP BY 1, 2
-        ),
-        sk AS (
-          SELECT vec_id, p // 8 AS tbl,
-            CAST(sum(CASE WHEN dot > 0 THEN (1::BIGINT << (p % 8)) ELSE 0 END)
-                 AS BIGINT) AS bucket
-          FROM dots GROUP BY 1, 2
-        ),
-        cand AS (
-          SELECT DISTINCT skq.vec_id AS qid, skc.vec_id AS cid
-          FROM sk skc JOIN sk skq
-            ON skc.tbl = skq.tbl AND skc.bucket = skq.bucket
-          WHERE skq.vec_id < 5 AND skc.vec_id <> skq.vec_id
-        ),
-        scored AS (
-          SELECT c.qid, c.cid,
-            list_sum(list_transform(generate_series(1, len(x.v)),
-              i -> x.v[i] * y.v[i]))
-            / (sqrt(list_sum(list_transform(generate_series(1, len(x.v)),
-                 i -> x.v[i] * x.v[i])))
-               * sqrt(list_sum(list_transform(generate_series(1, len(y.v)),
-                 i -> y.v[i] * y.v[i])))) AS score
-          FROM cand c
-          JOIN ve x ON x.vec_id = c.qid
-          JOIN ve y ON y.vec_id = c.cid
-        ),
-        r AS (
-          SELECT qid, cid,
-                 row_number() OVER (PARTITION BY qid
-                                    ORDER BY score DESC, cid) AS rank
-          FROM scored
-        )
-        SELECT qid, cid, CAST(rank AS BIGINT) AS rank FROM r WHERE rank <= 10
-    """
-
-    # --- embedding_near_dups: the integer hyperplane SimHash is exact
-    #     int64 math (quantize -> int plane dot -> sign bits), so DuckDB
-    #     replays it bit-identically: planes from mix64 over the flat
-    #     index (seed*2^32 + p*dim + d) mod 2001 - 1000, quantization
-    #     floor(x*1024 + 0.5) (identical float64 semantics), brute-force
-    #     hamming<=3 == the band-blocked set by pigeonhole (3 < 4 bands),
-    #     cosine via the same strict left-to-right double sums as the ANN
-    #     oracle.  Dim fixed at 64 (the driver embeddings table); the
-    #     planted near-dups replicate the Spark query's construction. ---
-    from humid_spark.functions.signatures import mix64_duckdb
-    from humid_spark.operators.embdedup import QUANT, WEIGHT_MOD
-
-    _edim, _eseed = 64, 1
-    _emix = mix64_duckdb(f"({_eseed} * 4294967296::HUGEINT + i)")
-
-    _EMB_PERTURB = """
-            list_transform(generate_series(1, len(embedding)), i ->
-              CAST(embedding[i] AS DOUBLE) *
-              (CASE WHEN (i - 1) % 7 = 0 THEN 1.08 ELSE 1.0 END))"""
-
-    def _emb_sig_ctes(bits: int, ve_sql: str | None = None) -> str:
-        """Shared CTEs: planted corpus (negated ids — collision-free at any
-        scale, ADVICE r4; override via ve_sql), quantization, integer
-        planes, signatures."""
-        ve = ve_sql or f"""
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings
-          UNION ALL
-          SELECT -vec_id - 1, {_EMB_PERTURB}
-          FROM embeddings WHERE vec_id < 100
-        """
-        return f"""
-        ve AS ({ve}),
-        q AS (
-          SELECT vec_id,
-            list_transform(v, x -> CAST(floor(x * {QUANT}.0 + 0.5) AS BIGINT)) AS qv
-          FROM ve
-        ),
-        planes AS (
-          SELECT i // {_edim} AS p, i % {_edim} AS d,
-            CAST(({_emix}) % {WEIGHT_MOD} AS BIGINT) - {WEIGHT_MOD // 2} AS w
-          FROM (SELECT unnest(generate_series(0, {bits * _edim - 1})) AS i)
-        ),
-        dots AS (
-          SELECT q.vec_id, planes.p, sum(q.qv[planes.d + 1] * planes.w) AS dot
-          FROM q, planes GROUP BY 1, 2
-        ),
-        sigs AS (
-          SELECT vec_id,
-            CAST(sum(CASE WHEN dot > 0 THEN (1::BIGINT << p) ELSE 0 END)
-                 AS BIGINT) AS esig
-          FROM dots GROUP BY 1
-        )"""
-
-    _emb_verify_sql = """
-        ver AS (
-          SELECT c.src, c.dst, c.bit_dist,
-            list_sum(list_transform(generate_series(1, len(x.v)),
-              i -> x.v[i] * y.v[i])) AS dot,
-            sqrt(list_sum(list_transform(generate_series(1, len(x.v)),
-              i -> x.v[i] * x.v[i]))) AS xn,
-            sqrt(list_sum(list_transform(generate_series(1, len(y.v)),
-              i -> y.v[i] * y.v[i]))) AS yn
-          FROM cand c
-          JOIN ve x ON x.vec_id = c.src
-          JOIN ve y ON y.vec_id = c.dst
-        )
-        SELECT src, dst, bit_dist,
-               CAST(floor(dot / (xn * yn) * 1000 + 0.5) AS BIGINT)
-                 AS cos_permille
-        FROM ver WHERE dot / (xn * yn) >= 0.99
-    """
-
-    # 16-bit variant: hamming<=3 over 4 bands is pigeonhole-exhaustive, so
-    # brute-force hamming IS the band-blocked set — the cheap oracle.
-    _emb_bf16_sql = f"""
-        WITH {_emb_sig_ctes(16)},
-        cand AS (
-          SELECT a.vec_id AS src, b.vec_id AS dst,
-                 CAST(bit_count(xor(a.esig, b.esig)) AS BIGINT) AS bit_dist
-          FROM sigs a, sigs b
-          WHERE a.vec_id < b.vec_id
-            AND bit_count(xor(a.esig, b.esig)) <= 3
-        ),
-        {_emb_verify_sql}
-    """
-
-    # Library-default widths (60-bit sig, 4 bands of 15 bits, hamming<=11):
-    # max_bits >= n_bands, so blocking is probabilistic and brute-force
-    # hamming would OVER-approximate the engine's pair set.  The oracle
-    # instead replays the BANDING itself — band value extraction is plain
-    # integer shift/mask (the 60-bit signature is non-negative, so
-    # arithmetic and unsigned shifts agree between Spark and DuckDB) —
-    # hash-checking the exact candidate machinery the library default runs.
-    _emb_wide_sql = f"""
-        WITH {_emb_sig_ctes(60)},
-        bands AS (
-          SELECT s.vec_id, s.esig, b.b AS band,
-                 (s.esig >> (b.b * 15)) & 32767 AS val
-          FROM sigs s, (SELECT unnest([0, 1, 2, 3]) AS b) b
-        ),
-        cand0 AS (
-          SELECT DISTINCT a.vec_id AS src, b.vec_id AS dst
-          FROM bands a JOIN bands b
-            ON a.band = b.band AND a.val = b.val AND a.vec_id < b.vec_id
-        ),
-        cand AS (
-          SELECT c.src, c.dst,
-                 CAST(bit_count(xor(sa.esig, sb.esig)) AS BIGINT) AS bit_dist
-          FROM cand0 c
-          JOIN sigs sa ON sa.vec_id = c.src
-          JOIN sigs sb ON sb.vec_id = c.dst
-          WHERE bit_count(xor(sa.esig, sb.esig)) <= 11
-        ),
-        {_emb_verify_sql}
-    """
-
-    # round-6 fold: one recorded row carries BOTH configs (see the
-    # emb_near_dups docstring in queries())
-    o["embedding_near_dups"] = f"""
-        SELECT 'bf16' AS mode, * FROM ({_emb_bf16_sql})
-        UNION ALL
-        SELECT 'wide60' AS mode, * FROM ({_emb_wide_sql})
-    """
-
-    # incremental embedding dedup: batch (vec_id % 3 == 0 + perturbed
-    # re-entries of index vectors) vs index (% 3 != 0).  hamming <= 3
-    # over 4 bands is pigeonhole-exhaustive, so brute-force batch-x-index
-    # hamming IS the cross-band-blocked set; signatures replay via the
-    # shared integer CTEs over the split corpus.
-    _ve_incr = f"""
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings
-          UNION ALL
-          SELECT -vec_id - 1, {_EMB_PERTURB}
-          FROM embeddings WHERE vec_id % 3 != 0 AND vec_id % 10 = 1
-        """
-    o["incremental_embedding_dedup"] = f"""
-        WITH {_emb_sig_ctes(16, _ve_incr)},
-        cand AS (
-          SELECT a.vec_id AS src, b.vec_id AS dst,
-                 CAST(bit_count(xor(a.esig, b.esig)) AS BIGINT) AS bit_dist
-          FROM (SELECT * FROM sigs WHERE vec_id < 0 OR vec_id % 3 = 0) a,
-               (SELECT * FROM sigs WHERE vec_id >= 0 AND vec_id % 3 != 0) b
-          WHERE bit_count(xor(a.esig, b.esig)) <= 3
-        ),
-        {_emb_verify_sql}
     """
 
     # --- containment_pairs: winnowing IS deterministic integer math, so
@@ -3418,256 +2657,21 @@ def oracle_sql() -> dict[str, str]:
         WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
     """
 
-    # Video stats replayed from the planting formula, never from bytes:
-    # luma v(doc_id, t, y, x) = (doc_id*53 + t*17 + y*7 + x*3) % 200
-    # over n = 4 + doc_id%4 frames of 16x16 at fps 12 + doc_id%3.
-    _vid_decode_sql = """
-        WITH ids AS (
-          SELECT doc_id, 4 + doc_id % 4 AS n, 12 + doc_id % 3 AS fps
-          FROM documents WHERE doc_id < 150
-        ),
-        px AS (
-          SELECT i.doc_id, i.n, i.fps,
-                 (i.doc_id*53 + t.t*17 + y.y*7 + x.x*3) % 200 AS v
-          FROM ids i,
-               unnest(generate_series(0, i.n - 1)) AS t(t),
-               unnest(generate_series(0, 15)) AS y(y),
-               unnest(generate_series(0, 15)) AS x(x)
-        ),
-        agg AS (
-          SELECT doc_id, any_value(n) AS n, any_value(fps) AS fps,
-                 sum(v) AS ysum, sum(v * v) AS ysumsq
-          FROM px GROUP BY doc_id
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS url, TRUE AS decoded,
-               CAST(16 AS INTEGER) AS width, CAST(16 AS INTEGER) AS height,
-               CAST(n AS BIGINT) AS n_frames,
-               CAST(fps AS INTEGER) AS fps_num,
-               CAST(1 AS INTEGER) AS fps_den,
-               CAST(n * 1000 // fps AS BIGINT) AS duration_ms,
-               CAST(ysum AS BIGINT) AS y_sum,
-               CAST(ysumsq AS BIGINT) AS y_sumsq
-        FROM agg
-    """
-
-    # Per-sampled-frame aHash (t = 0,2,4) from the luma formula —
-    # 2x2 block sums, bit iff bsum*64 > frame total (the mono
-    # cross-multiplication), HUGEINT packing — then the per-bit 2-of-3
-    # majority combine, the signed int64 wrap, and brute-forced pairs
-    # at hamming <= 3 (equal to the engine's band blocking by
-    # pigeonhole, max_bits < n_bands).
-    _vid_nd_sql = """
-        WITH vids AS (
-          SELECT CAST(doc_id AS VARCHAR) AS url, doc_id, 0 AS shift
-          FROM documents WHERE doc_id < 80
-          UNION ALL
-          SELECT 's' || CAST(doc_id AS VARCHAR) AS url, doc_id, 8 AS shift
-          FROM documents WHERE doc_id < 80 AND doc_id % 5 = 0
-        ),
-        px AS (
-          SELECT v.url, t.t, y.y, x.x,
-                 (v.doc_id*53 + t.t*17 + y.y*7 + x.x*3) % 200 + v.shift
-                   AS luma
-          FROM vids v,
-               unnest([0, 2, 4]) AS t(t),
-               unnest(generate_series(0, 15)) AS y(y),
-               unnest(generate_series(0, 15)) AS x(x)
-        ),
-        tot AS (
-          SELECT url, t, sum(luma) AS total FROM px GROUP BY url, t
-        ),
-        blk AS (
-          SELECT url, t, y // 2 AS by, x // 2 AS bx, sum(luma) AS bsum
-          FROM px GROUP BY url, t, y // 2, x // 2
-        ),
-        fh AS (
-          SELECT b.url, b.t,
-                 sum(CASE WHEN b.bsum * 64 > tt.total
-                          THEN CAST(1 AS HUGEINT) << (b.by * 8 + b.bx)
-                          ELSE CAST(0 AS HUGEINT) END) AS p
-          FROM blk b JOIN tot tt USING (url, t)
-          GROUP BY b.url, b.t
-        ),
-        bits AS (
-          SELECT f.url, g.b,
-                 sum(CAST((f.p >> g.b) & 1 AS INTEGER)) AS cnt,
-                 count(*) AS nf
-          FROM fh f, unnest(generate_series(0, 63)) AS g(b)
-          GROUP BY f.url, g.b
-        ),
-        sig AS (
-          SELECT url,
-                 sum(CASE WHEN cnt * 2 > nf
-                          THEN CAST(1 AS HUGEINT) << b
-                          ELSE CAST(0 AS HUGEINT) END) AS p
-          FROM bits GROUP BY url
-        ),
-        sh AS (
-          SELECT url,
-                 CAST(CASE WHEN p >= CAST(1 AS HUGEINT) << 63
-                           THEN p - (CAST(1 AS HUGEINT) << 64)
-                           ELSE p END AS BIGINT) AS vhash
-          FROM sig
-        )
-        SELECT a.url AS src, b.url AS dst,
-               CAST(bit_count(xor(a.vhash, b.vhash)) AS BIGINT) AS bit_dist
-        FROM sh a JOIN sh b ON a.url < b.url
-        WHERE bit_count(xor(a.vhash, b.vhash)) <= 3
-    """
-
-    # Resized-video luma sums from the formula: sampled frames t in
-    # (0, 2, ...) of n = 4 + doc_id%4; output pixel = floor(2x2-block
-    # sum / 4); width/height/n_frames/fps are the RESIZED stream's
-    # (8x8, ceil(n/2) frames, source fps preserved by the re-encode).
-    _vid_resize_sql = """
-        WITH ids AS (
-          SELECT doc_id, 4 + doc_id % 4 AS n, 12 + doc_id % 3 AS fps
-          FROM documents WHERE doc_id < 100
-        ),
-        px AS (
-          SELECT i.doc_id, i.n, i.fps, t.t, y.y // 2 AS oy, x.x // 2 AS ox,
-                 (i.doc_id*53 + t.t*17 + y.y*7 + x.x*3) % 200 AS v
-          FROM ids i,
-               unnest(generate_series(0, i.n - 1)) AS t(t),
-               unnest(generate_series(0, 15)) AS y(y),
-               unnest(generate_series(0, 15)) AS x(x)
-          WHERE t.t % 2 = 0
-        ),
-        blocks AS (
-          SELECT doc_id, any_value(n) AS n, any_value(fps) AS fps,
-                 t, oy, ox, sum(v) // 4 AS out_v
-          FROM px GROUP BY doc_id, t, oy, ox
-        ),
-        agg AS (
-          SELECT doc_id, any_value(n) AS n, any_value(fps) AS fps,
-                 count(DISTINCT t) AS nf, sum(out_v) AS ysum
-          FROM blocks GROUP BY doc_id
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS url,
-               CAST(8 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height,
-               CAST(nf AS BIGINT) AS n_frames,
-               CAST(fps AS INTEGER) AS fps_num,
-               CAST(ysum AS BIGINT) AS y_sum
-        FROM agg
-    """
-
     o["multimodal_decode_stats"] = (
         _unpivot_modal_sql(_img_decode_sql, "image", _IMG_STATS_COLS)
         + " UNION ALL "
         + _unpivot_modal_sql(_aud_decode_sql, "audio", _AUD_STATS_COLS)
-        + " UNION ALL "
-        + _unpivot_modal_sql(_vid_decode_sql, "video", _VID_STATS_COLS)
     )
 
     o["multimodal_near_dups"] = (
         f"SELECT 'image' AS modality, src, dst, bit_dist FROM ({_img_nd_sql}) "
         f"UNION ALL "
-        f"SELECT 'audio' AS modality, src, dst, bit_dist FROM ({_aud_nd_sql}) "
-        f"UNION ALL "
-        f"SELECT 'video' AS modality, src, dst, bit_dist FROM ({_vid_nd_sql})"
+        f"SELECT 'audio' AS modality, src, dst, bit_dist FROM ({_aud_nd_sql})"
     )
 
-    o["multimodal_resize_stats"] = (
-        _unpivot_modal_sql(_img_resize_sql, "image", _IMG_RESIZE_COLS)
-        + " UNION ALL "
-        + _unpivot_modal_sql(_vid_resize_sql, "video", _VID_RESIZE_COLS)
+    o["multimodal_resize_stats"] = _unpivot_modal_sql(
+        _img_resize_sql, "image", _IMG_RESIZE_COLS
     )
-
-    # Sub-clip containment replayed end to end: per-frame aHash from
-    # the luma formula (clip frame j = base frame j+2), 3-gram Horner
-    # hashes in HUGEINT mod-2^64 (base 1000003 — exactly the numpy
-    # uint64 wraparound), window-min over 4 consecutive grams, DISTINCT
-    # fingerprints, then the inverted-index share join (no fingerprint
-    # is hot at this corpus size, so the fp_cap=500 path is a no-op on
-    # both sides).  share_permille floors shared*1000/min(sizes).
-    o["video_subclip_containment"] = """
-        WITH vids AS (
-          SELECT CAST(doc_id AS VARCHAR) AS url, doc_id,
-                 8 + doc_id % 4 AS nf, 0 AS off
-          FROM documents WHERE doc_id < 40
-          UNION ALL
-          SELECT 'c' || CAST(doc_id AS VARCHAR) AS url, doc_id,
-                 6 AS nf, 2 AS off
-          FROM documents WHERE doc_id < 40 AND doc_id % 4 = 0
-        ),
-        px AS (
-          SELECT v.url, j.j, y.y, x.x,
-                 (v.doc_id*53 + (j.j + v.off)*17 + y.y*7 + x.x*3) % 200
-                   AS luma
-          FROM vids v,
-               unnest(generate_series(0, v.nf - 1)) AS j(j),
-               unnest(generate_series(0, 15)) AS y(y),
-               unnest(generate_series(0, 15)) AS x(x)
-        ),
-        tot AS (
-          SELECT url, j, sum(luma) AS total FROM px GROUP BY url, j
-        ),
-        blk AS (
-          SELECT url, j, y // 2 AS by, x // 2 AS bx, sum(luma) AS bsum
-          FROM px GROUP BY url, j, y // 2, x // 2
-        ),
-        fh AS (
-          SELECT b.url, b.j,
-                 sum(CASE WHEN b.bsum * 64 > t.total
-                          THEN CAST(1 AS HUGEINT) << (b.by * 8 + b.bx)
-                          ELSE CAST(0 AS HUGEINT) END) AS p
-          FROM blk b JOIN tot t USING (url, j)
-          GROUP BY b.url, b.j
-        ),
-        grams AS (
-          SELECT url, j,
-                 ((p * 1000003 % (CAST(1 AS HUGEINT) << 64)
-                   + lead(p, 1) OVER wj)
-                  % (CAST(1 AS HUGEINT) << 64) * 1000003
-                  % (CAST(1 AS HUGEINT) << 64)
-                  + lead(p, 2) OVER wj)
-                 % (CAST(1 AS HUGEINT) << 64) AS g,
-                 count(*) OVER (PARTITION BY url) AS nf
-          FROM fh
-          WINDOW wj AS (PARTITION BY url ORDER BY j)
-        ),
-        wm AS (
-          SELECT url, j,
-                 min(g) OVER (PARTITION BY url ORDER BY j
-                              ROWS BETWEEN CURRENT ROW
-                              AND 3 FOLLOWING) AS fp,
-                 nf - 2 AS ngrams
-          FROM grams WHERE j <= nf - 3
-        ),
-        fps AS (
-          SELECT DISTINCT url, fp FROM wm WHERE j <= ngrams - 4
-        ),
-        sizes AS (SELECT url, count(*) AS n_fp FROM fps GROUP BY url),
-        shared AS (
-          SELECT a.url AS src, b.url AS dst, count(*) AS shared
-          FROM fps a JOIN fps b ON a.fp = b.fp AND a.url < b.url
-          GROUP BY a.url, b.url
-        )
-        SELECT s.src, s.dst,
-               CAST(floor(s.shared * 1000.0 /
-                          least(na.n_fp, nb.n_fp)) AS BIGINT)
-                 AS share_permille
-        FROM shared s
-        JOIN sizes na ON na.url = s.src
-        JOIN sizes nb ON nb.url = s.dst
-        WHERE s.shared * 1000 >= 700 * least(na.n_fp, nb.n_fp)
-    """
-
-    o["events_dedup_windowed"] = """
-        WITH x AS (
-          SELECT user_id, event_type, event_id,
-                 CAST(floor(epoch(ts)) AS BIGINT) AS es,
-                 CAST(floor(epoch(ts)) AS BIGINT) // 600 AS win
-          FROM events),
-        r AS (SELECT user_id, event_type, win, event_id,
-                     row_number() OVER (PARTITION BY user_id, event_type, win
-                                        ORDER BY es, event_id) AS rn,
-                     count(*) OVER (PARTITION BY user_id, event_type, win)
-                       AS n_events
-              FROM x)
-        SELECT user_id, event_type, win, event_id AS keep_event_id, n_events
-        FROM r WHERE rn = 1
-    """
 
     o["substring_dups"] = """
         WITH aug AS (
@@ -3682,10 +2686,6 @@ def oracle_sql() -> dict[str, str]:
           AND length(a.text) >= 23 AND contains(b.text, a.text)
     """
 
-    # ann_hyperplane_topk / ann_ivf_topk intentionally omitted: approximate
-    # operators (random-hyperplane blocking / kmeans inverted lists); the
-    # driver records rows-only, and tests/test_ann.py pins recall against
-    # the exact operator (plus full-probe == exact for IVF).
     # directional_clusters intentionally omitted: sequential greedy semantics
     # (reference src/cluster.cc:39-87) are not SQL-expressible; the driver
     # records the weaker rows-only check and pytest pins exact parity.

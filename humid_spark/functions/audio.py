@@ -147,8 +147,8 @@ def audio_near_dups(
     band_cap: int = 2000,
     track: list | None = None,
 ) -> DataFrame:
-    """Acoustic near-duplicate detection — the third leg of the
-    perceptual-dedup trio (image aHash, video majority-aHash, this):
+    """Acoustic near-duplicate detection — the audio counterpart of the
+    image aHash path:
     REAL WAV decode -> 64-bit envelope fingerprint (one narrow Arrow
     pass; blobs never shuffle) -> the engine's capped+salted SimHash
     band join.  With max_bits < n_bands blocking is

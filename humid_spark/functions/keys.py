@@ -140,13 +140,6 @@ def key_budget(peek_size: int, cfg: DedupConfig) -> tuple[int, int]:
     return take_umi, cfg.word_length - take_umi
 
 
-def doc_order_column(ts: Column, url: Column) -> Column:
-    """Deterministic 'input order' stand-in: the reference consumes files
-    top-to-bottom; our table rows are ordered by (warc_ts, url).  Used for
-    first-in-input-order semantics (F2 emit, src/humid.cc:224-231)."""
-    return F.struct(ts.alias("ts"), url.alias("url"))
-
-
 def with_key_columns(df: DataFrame, cfg: DedupConfig, text_col: str = "text",
                      url_col: str = "url",
                      umi_size: int | None = None) -> DataFrame:

@@ -1,6 +1,6 @@
 """Multimodal column handling (training-data-pipeline extra).
 
-Images/audio/video are opaque `binary` columns with typed metadata.  The
+Images and audio are opaque `binary` columns with typed metadata.  The
 Spark-side plumbing — schemas, Arrow batch shapes, mapInPandas signatures,
 partition-size hygiene for large blobs — is real and tested.
 

@@ -3,12 +3,11 @@ reference's fixed-length word key (SURVEY.md §2.13).
 
 Two implementations, both from scratch (no pyspark.ml.feature.MinHashLSH):
 
-1. Fast engine path (`make_minhash_udf` / `make_simhash_udf`): vectorized
-   pandas UDFs — Arrow batches in, numpy per batch, zero per-row Python
-   objects in the steady state.  Char shingles are hashed with a polynomial
-   rolling hash mod the Mersenne prime 2^31-1, then k universal-hash
-   permutations (a_j*h+b_j mod p) are minimized per doc.  This is the path
-   bench.py measures.
+1. Fast engine path (`minhash_map_in_arrow` / `make_simhash_udf`):
+   vectorized Arrow UDFs — Arrow batches in, numpy per batch, zero per-row
+   Python objects in the steady state.  Char shingles are hashed with a
+   polynomial rolling hash mod the Mersenne prime 2^31-1, then k
+   universal-hash permutations (a_j*h+b_j mod p) are minimized per doc.
 
 2. SQL parity path (`minhash_sql_*`, `simhash_sql_*`): the same math as
    built-in Catalyst expressions (md5-derived shingle hashes), with a
@@ -130,37 +129,11 @@ def simhash64(text: str | None, k: int) -> int:
 
 
 def _default_scheme() -> str:
-    """Resolve the scheme from DedupConfig so the two entry points
-    (make_minhash_udf / minhash_map_in_arrow) can never silently disagree
-    with the shipped default (round-2 ADVICE)."""
+    """Resolve the scheme from DedupConfig so `minhash_map_in_arrow` can
+    never silently disagree with the shipped default (round-2 ADVICE)."""
     from humid_spark.config import DedupConfig
 
     return DedupConfig.minhash_scheme
-
-
-def make_minhash_udf(shingle_k: int, num_perm: int, seed: int = 42,
-                     scheme: str | None = None):
-    """scheme=None: follow DedupConfig.minhash_scheme (the shipped
-    default).  'oph': one-permutation + densification, O(S)/doc — the
-    fast path.  'kperm': classic k independent universal hashes,
-    O(num_perm*S)/doc."""
-    scheme = scheme or _default_scheme()
-    if scheme == "oph":
-        # 31-bit slots -> array<int>: halves every signature shuffle/join
-        @pandas_udf(T.ArrayType(T.IntegerType()))
-        def minhash_udf(texts: pd.Series) -> pd.Series:
-            sig = oph_signatures_batch(texts.tolist(), shingle_k, num_perm)
-            return pd.Series(sig.tolist())
-    else:
-
-        @pandas_udf(T.ArrayType(T.LongType()))
-        def minhash_udf(texts: pd.Series) -> pd.Series:
-            sig = kperm_signatures_batch(
-                texts.tolist(), shingle_k, num_perm, seed
-            )
-            return pd.Series(sig.astype(np.int64).tolist())
-
-    return minhash_udf
 
 
 def concat_poly_hashes(
@@ -431,11 +404,6 @@ def est_jaccard(sig_a: Column, sig_b: Column) -> Column:
         lambda acc, v: acc + v,
     )
     return agree / F.size(sig_a)
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Bit Hamming distance between two 64-bit SimHashes (JVM-side)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,6 @@ STOPWORDS_ES = (
     "tienen desde o por no al pero nosotros ellos tu"
 ).split()
 
-_PUNCT_CLASS = r"[^.,;:!?]"
 _WS = r"\s+"
 
 

@@ -151,11 +151,3 @@ def edit_pairs(uniq: DataFrame, n: int, m: int) -> DataFrame:
         .distinct()
     )
     return cand.filter(F.levenshtein(F.col("src"), F.col("dst")) <= F.lit(m))
-
-
-def symmetrize(pairs: DataFrame) -> DataFrame:
-    """(src,dst) once-per-pair -> both directions (the reference pushes each
-    pair into both adjacency lists, src/humid.cc:121-122)."""
-    return pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )

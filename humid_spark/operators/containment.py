@@ -247,10 +247,9 @@ def containment_pairs_from_fps(
     fp_cap: int = 500,
 ) -> DataFrame:
     """The containment pair engine over an ALREADY-FINGERPRINTED table
-    (doc, fps array<long>) — the backend of `containment_pairs` (text
-    winnowing) and `functions/video.video_subclip_pairs` (frame-hash
-    winnowing).  Callers own materialization of `fps`: it is consumed
-    four times (sizes, inverted index, both self-join sides)."""
+    (doc, fps array<long>) — the backend of `containment_pairs`.  The
+    caller owns materialization of `fps`: it is consumed four times
+    (sizes, inverted index, both self-join sides)."""
     inv = fps.select("doc", F.explode("fps").alias("fp"))
     hot = (
         inv.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))

@@ -34,11 +34,3 @@ def unique_keys(keyed_pages: DataFrame) -> DataFrame:
             F.col("first_doc.url").alias("first_url"),
         )
     )
-
-
-def scan_counters(keyed_pages: DataFrame) -> DataFrame:
-    """total/usable counters (src/humid.cc:90-99) as a 1-row DataFrame."""
-    return keyed_pages.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count_if(F.col("usable")).alias("usable"),
-    )

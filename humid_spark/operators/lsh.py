@@ -149,11 +149,10 @@ def simhash_pairs(
     bands and equi-join on (band, value).  When max_bits < n_bands the
     pigeonhole principle makes blocking exhaustive (two fingerprints
     within max_bits must agree on at least one band); when
-    max_bits >= n_bands (wide signatures, e.g. the 60-bit embedding
-    default) blocking is the standard probabilistic SimHash scheme —
-    recall per pair is 1 - (1 - (1-p)^width)^n_bands at per-bit flip
-    probability p.  Band extraction is shift/mask (JVM), verification is
-    bit_count(xor) <= max_bits.
+    max_bits >= n_bands blocking is the standard probabilistic SimHash
+    scheme — recall per pair is 1 - (1 - (1-p)^width)^n_bands at per-bit
+    flip probability p.  Band extraction is shift/mask (JVM),
+    verification is bit_count(xor) <= max_bits.
 
     Skew control (same scheme as `candidate_pairs`, VERDICT r4 item 1):
     a boilerplate-heavy web corpus concentrates identical band values —
@@ -164,25 +163,23 @@ def simhash_pairs(
     - 2 <= size < salt_threshold        -> plain equi-join
     - salt_threshold <= size <= band_cap -> salted self-join (identical
       pair set, the O(size^2) work spread over `salts` partitions)
-    - size > band_cap                   -> demoted (lineage via
-      `demoted_simhash_bands`, never silent).  Demoted members still
-      pair through their other, more selective bands; truly identical
-      fingerprints (exact dups) should be collapsed upstream, exactly
-      as run_web_pipeline collapses exact text dups before MinHash LSH.
+    - size > band_cap                   -> demoted.  Demoted members
+      still pair through their other, more selective bands; truly
+      identical fingerprints (exact dups) should be collapsed upstream,
+      exactly as run_web_pipeline collapses exact text dups before
+      MinHash LSH.
 
     The narrow (doc, fingerprint) projection of `sims` is materialized
     ONCE with an eager localCheckpoint before any fan-out: this operator
     consumes its input from five branches (band sizing, cold self-join
     x2, hot self-join x2), and every producer feeding it computes the
-    fingerprint with an expensive opaque pass (image/audio/video decode
-    mapInPandas, the SimHash text UDF, the embedding sketch) that Spark
-    would otherwise re-execute per branch — the round-7 baseline plan for
-    the image path carried 16 MapInPandas nodes for one logical decode.
-    The checkpoint is the guide-§8 lightweight proxy (16 bytes/row
-    regardless of payload width, scale-safe at any corpus size).  With
-    `track`, a release handle for those blocks (and the persisted pruned
-    band membership) is appended for the caller; without `track` the tiny
-    blocks live until session end.
+    fingerprint with an expensive opaque pass (image/audio decode
+    mapInPandas, the SimHash text UDF) that Spark would otherwise
+    re-execute per branch.  The checkpoint is the guide-§8 lightweight
+    proxy (16 bytes/row regardless of payload width, scale-safe at any
+    corpus size).  With `track`, a release handle for those blocks (and
+    the persisted pruned band membership) is appended for the caller;
+    without `track` the tiny blocks live until session end.
     """
     from humid_spark.operators.cc import CheckpointHandle
 
@@ -250,36 +247,6 @@ def simhash_pairs(
         .filter(F.col("bit_dist") <= max_bits)
         .select("src", "dst", "bit_dist")
         .distinct()
-    )
-
-
-def demoted_simhash_bands(
-    sims: DataFrame,
-    n_bands: int = 4,
-    sim_col: str = "simhash",
-    sig_bits: int = 64,
-    band_cap: int = 2000,
-) -> DataFrame:
-    """Lineage for `simhash_pairs`: the (band, val, band_size) rows the
-    cap demoted — the SimHash analog of `demoted_buckets`."""
-    width = sig_bits // n_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftrightunsigned(F.col(sim_col), b * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("val"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return (
-        sims.select(F.explode(bands).alias("bb"))
-        .select("bb.band", "bb.val")
-        .groupBy("band", "val")
-        .agg(F.count(F.lit(1)).alias("band_size"))
-        .filter(F.col("band_size") > band_cap)
     )
 
 

@@ -55,7 +55,7 @@ and corpus-sized ingest belongs in `DedupIndex.build` or
 outgrow a broadcast would need a uniq table bucketed by doc_id, so a
 storage-partitioned join removes the shuffle.)
 Measured (1M-corpus / 100k-batch
-A/B, BENCH/incremental_ab.py): the materialized band table cut the
+A/B, BENCH/incremental_ab.json): the materialized band table cut the
 per-snapshot classify ~10% at 1M (93.1s -> 83.6s) — the bigger effect is
 structural: without it the near tier re-derives bands from the minhash
 column (the dominant index bytes) every snapshot; with it that column is

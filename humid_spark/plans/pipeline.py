@@ -5,8 +5,8 @@
           -> components + exact greedy replay -> cluster ids
           -> annotated / dedup sinks + histograms + scalar stats
 
-All intermediate DataFrames are exposed on the result object so tests,
-`__spark_entry__.queries()` and bench.py reuse the same plan fragments.
+All intermediate DataFrames are exposed on the result object so tests and
+`__spark_entry__.queries()` reuse the same plan fragments.
 """
 
 from __future__ import annotations

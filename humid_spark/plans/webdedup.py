@@ -30,7 +30,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from humid_spark.config import DedupConfig
-from humid_spark.functions.signatures import make_minhash_udf
 from humid_spark.operators import lsh
 from humid_spark.operators.cc import connected_components
 from humid_spark.sources.io import CheckpointStore

@@ -1,9 +1,10 @@
 """SparkSession factory with scale-oriented defaults.
 
-Single place that owns the session config so tests, bench.py and the driver
-entry all get identical behavior.  Defaults are tuned for correctness at
-local[N] while remaining the settings you would ship to a 1000-executor
-cluster (AQE on, skew-join on, Arrow on, sane shuffle partitioning).
+Single place that owns the session config so tests, the CLI, dedupbench
+and `__spark_entry__.py` all get identical behavior.  Defaults are tuned
+for correctness at local[N] while remaining the settings you would ship to
+a 1000-executor cluster (AQE on, skew-join on, Arrow on, sane shuffle
+partitioning).
 """
 
 from __future__ import annotations

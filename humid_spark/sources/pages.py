@@ -246,22 +246,6 @@ def fx_skew(seed: int = 42) -> list[dict]:
     return _rows("skew", specs)
 
 
-def fx_bench(n_rows: int = 20_000, seed: int = 42) -> list[dict]:
-    """Scaling tier: same generator as fx_webtext, scaled (FIXTURES.md §6)."""
-    rng = random.Random(seed)
-    specs: list[tuple[str, str | None, int]] = []
-    s = 0
-    while len(specs) < n_rows:
-        doc = _doc(rng)
-        specs.append((f"seed{s}", doc, 1))
-        ndups = 0
-        while ndups < 8 and rng.random() < 0.4 and len(specs) < n_rows:
-            specs.append((f"seed{s}-dup{ndups}", _edit_doc(rng, doc), 1))
-            ndups += 1
-        s += 1
-    return _rows("bench", specs)
-
-
 def to_spark(spark: SparkSession, rows: list[dict]) -> DataFrame:
     data = [
         (r["url"], r["warc_ts"], r["html"], r["text"], r["lang"]) for r in rows

@@ -26,9 +26,7 @@ def test_every_query_has_oracle_or_reason(spark):
     assert os_ <= qs
     # documented rows-only exceptions only (simhash_near_dups gained a
     # full DuckDB oracle in round 3 — mix64 in HUGEINT arithmetic)
-    assert qs - os_ == {
-        "directional_clusters", "ann_hyperplane_topk", "ann_ivf_topk",
-    }
+    assert qs - os_ == {"directional_clusters"}
 
 
 @pytest.mark.slow

@@ -110,13 +110,18 @@ def test_tombstoned_index_still_never_shuffles(didx, spark):
     BroadcastExchange (it is batch-bounded by design), so this pin allows
     broadcasts and forbids exactly the scale-killer: a shuffle between
     any such scan and its join."""
-    from tests.test_incremental_index import _executed_plans, _tree_nodes
+    from tests.test_incremental_index import (
+        _executed_plans,
+        _no_auto_broadcast,
+        _tree_nodes,
+    )
 
     didx.delete(spark.createDataFrame([("http://d/base",)], "url string"))
     batch = _pages(
         spark, [("http://f/x", OTHER + " tail"), ("http://f/y", BASE)]
     )
-    res, plans = _executed_plans(spark, lambda: didx.dedup_batch(batch))
+    with _no_auto_broadcast(spark):
+        res, plans = _executed_plans(spark, lambda: didx.dedup_batch(batch))
     import re
 
     nodes = _tree_nodes(*plans)

@@ -1,5 +1,5 @@
 """Salted hot-bucket self-join: exact same pair set as the unsalted join,
-with the work spread across salt partitions."""
+with the work spread across salt partitions; capped SimHash bands."""
 
 from __future__ import annotations
 
@@ -35,5 +35,34 @@ def test_salted_pairs_exact(spark):
         p for p in oversized_bucket if False
     } | set()  # 150 > 100 -> demoted; 600 > 100 -> demoted
     assert got2 == cold
+    for df in tracked:
+        df.unpersist()
+
+
+def test_simhash_hot_band_capped(spark):
+    """A degenerate corpus (thousands of identical fingerprints -> one hot
+    value in EVERY band) must produce a bounded pair set — never a
+    quadratic self-join (VERDICT r4 item 1: planted hot-band fixture)."""
+    import pandas as pd
+
+    from humid_spark.operators.lsh import simhash_pairs
+
+    n_hot, cap = 3000, 200
+    # 3000 identical fingerprints + 3 pairs of distinct near-identical ones
+    rows = [{"doc_id": i, "simhash": 0x0F0F0F0F0F0F0F0F} for i in range(n_hot)]
+    rows += [{"doc_id": 10_000 + i, "simhash": (1 << 60) + (i // 2) * 4096 + (i % 2)}
+             for i in range(6)]
+    sims = spark.createDataFrame(pd.DataFrame(rows))
+
+    tracked: list = []
+    pairs = simhash_pairs(sims, max_bits=3, n_bands=4, band_cap=cap,
+                          track=tracked).collect()
+    got = {(r["src"], r["dst"]) for r in pairs}
+    # hot members pair in NO band (every band value demoted at cap 200);
+    # the distinct near-pairs (hamming 1) survive through their clean bands
+    assert all(s >= 10_000 for s, _ in got), "hot band leaked pairs"
+    assert {(10_000 + 2 * i, 10_001 + 2 * i) for i in range(3)} <= got
+    assert len(got) <= 15  # bounded: never ~n_hot^2/2
+
     for df in tracked:
         df.unpersist()

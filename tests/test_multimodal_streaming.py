@@ -1,5 +1,5 @@
-"""Multimodal binary-column plumbing (stubbed decode) and the
-Structured-Streaming exact-dedup operator."""
+"""Multimodal binary-column plumbing (stubbed decode) and binary exact
+dedup."""
 
 from __future__ import annotations
 
@@ -31,124 +31,3 @@ def test_binary_exact_dups(spark):
     # 5 distinct texts -> 5 distinct blobs with counts 2,4,8,10,3
     assert sorted(r["n"] for r in dups) == [2, 3, 4, 8, 10]
 
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    import time
-
-    from pyspark.sql import functions as F
-
-    from humid_spark.streaming.dedup import streaming_exact_dedup
-
-    src = str(tmp_path / "in")
-    pages = to_spark(spark, fx_cluster_chain_gap())
-    pages.write.parquet(src)
-
-    stream = spark.readStream.schema(pages.schema).parquet(src)
-    deduped = streaming_exact_dedup(stream)
-    query = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    time.sleep(1)
-    out = spark.sql("select * from dedup_stream").collect()
-    # 27 input rows, 5 distinct texts -> 5 survivors
-    assert len(out) == 5
-    assert len({r["text"] for r in out}) == 5
-    _ = F
-
-
-def test_stateful_first_seen(spark, tmp_path):
-    """Custom applyInPandasWithState dedup: one output row per fingerprint
-    with the first-seen url and the duplicate count; a second batch of
-    all-duplicate rows emits NOTHING (state counts silently)."""
-    import time
-
-    from humid_spark.streaming.dedup import stateful_first_seen
-
-    src = str(tmp_path / "in_state")
-    pages = to_spark(spark, fx_cluster_chain_gap())
-    pages.write.parquet(src)
-
-    stream = spark.readStream.schema(pages.schema).parquet(src)
-    out = stateful_first_seen(stream)
-    query = (
-        out.writeStream.format("memory")
-        .queryName("first_seen_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(120)
-    time.sleep(1)
-    rows = spark.sql("select * from first_seen_stream").collect()
-    # 27 rows, 5 distinct texts -> 5 first-seen rows; dup counts cover the rest
-    assert len(rows) == 5
-    assert sorted(r["n_dups"] for r in rows) == [1, 2, 3, 7, 9]
-    assert sum(r["n_dups"] for r in rows) + len(rows) == 27
-    # first-seen url = min (ts, url) of its fingerprint group
-    expect = {}
-    for p in sorted(fx_cluster_chain_gap(), key=lambda r: (r["warc_ts"], r["url"])):
-        expect.setdefault(p["text"], p["url"])
-    got_urls = {r["url"] for r in rows}
-    assert got_urls == set(expect.values())
-
-
-def test_stateful_first_seen_spans_chunks(spark, tmp_path):
-    """A hot key's micro-batch data arrives as MULTIPLE pandas chunks
-    (Arrow batch size); the emitted row must be the (ts, url) minimum
-    across ALL chunks, not the first chunk's (round-2 ADVICE fix).
-    Forced by shrinking maxRecordsPerBatch below the group size and
-    putting the minimum row LAST in natural order."""
-    import time
-    from datetime import datetime, timedelta, timezone
-
-    from humid_spark.streaming.dedup import stateful_first_seen
-
-    t0 = datetime(2026, 1, 1, tzinfo=timezone.utc)
-    rows = [
-        {
-            "url": f"https://ex.com/{99 - i:03d}",
-            "warc_ts": t0 + timedelta(seconds=100 - i),
-            "html": None,
-            "text": "same payload every time",
-            "lang": "en",
-        }
-        for i in range(40)
-    ]
-    # the minimum (ts, url) row is i=39 -> url /060, ts t0+61
-    src = str(tmp_path / "in_chunked")
-    pages = spark.createDataFrame(
-        [(r["url"], r["warc_ts"], r["html"], r["text"], r["lang"])
-         for r in rows],
-        "url string, warc_ts timestamp, html string, text string, lang string",
-    )
-    pages.coalesce(1).write.parquet(src)
-
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", None)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        stream = spark.readStream.schema(pages.schema).parquet(src)
-        query = (
-            stateful_first_seen(stream)
-            .writeStream.format("memory").queryName("first_seen_chunked")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination(120)
-        time.sleep(1)
-        got = spark.sql("select * from first_seen_chunked").collect()
-        assert len(got) == 1
-        assert got[0]["url"] == "https://ex.com/060"
-        assert got[0]["n_dups"] == 39
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
-        else:
-            spark.conf.set(
-                "spark.sql.execution.arrow.maxRecordsPerBatch", old
-            )

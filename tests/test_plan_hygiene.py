@@ -51,16 +51,8 @@ def test_no_cartesian_products_anywhere(spark):
     query plan (the scale-killer class)."""
     import __spark_entry__ as e
 
-    # ann_cosine_topk is the one DESIGNED broadcast nested loop: exact
-    # brute-force KNN broadcasts the small query set against the corpus
-    # (the corpus never shuffles; operators/ann.py documents the
-    # small-query assumption, and ann_hyperplane_topk is the equi-join
-    # scale path).  Everything else must be equi-join-shaped.
-    allowed = {"ann_cosine_topk"}
     offenders = {}
     for name, fn in e.queries().items():
-        if name in allowed:
-            continue
         plan = _plan(fn(spark, SF))
         if "CartesianProduct" in plan or "BroadcastNestedLoop" in plan:
             offenders[name] = True
