@@ -161,7 +161,7 @@ def audio_near_dups(
     )
     return simhash_pairs(
         fps, max_bits=max_bits, n_bands=n_bands,
-        id_col="url", sim_col="afp", sig_bits=64,
+        id_col="url", sim_col="afp",
         band_cap=band_cap, track=track,
     )
 

@@ -468,6 +468,6 @@ def image_near_dups(
     )
     return simhash_pairs(
         hashes, max_bits=max_bits, n_bands=n_bands,
-        id_col="url", sim_col="ahash", sig_bits=64,
+        id_col="url", sim_col="ahash",
         band_cap=band_cap, track=track,
     )

@@ -13,7 +13,9 @@ set holds at most `DRIVER_EDGE_BUDGET` edges it is collected over Arrow
 and labelled by a vectorised numpy union-find (`_min_labels`: hook roots
 onto smaller labels, then pointer jumping) — the union-find primitive BTS
 ("Load-Balanced Distributed Union-Find", ICDE 2024) argues for.  A graph
-that starts under the budget runs no star round at all.
+that starts under the budget runs no star round at all.  The same
+labelling (`min_components`) clusters an index snapshot's batch-bounded
+graph in `DedupIndex.cluster_batch`, which never runs star rounds.
 
 Works over any orderable node type (string keys in parity mode, long doc
 ids in the web-scale LSH path).
@@ -136,24 +138,27 @@ def _min_labels(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
             lab = jumped
 
 
+def min_components(src: np.ndarray, dst: np.ndarray) -> pd.DataFrame:
+    """Label the graph of edges (src[i], dst[i]) on the driver: one
+    (node, component) row per node, component = the smallest node of its
+    component.  Node order is numpy's sort order, which for strings is
+    code-point order — the order of Spark's UTF-8 bytes."""
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    lab = _min_labels(idx[: len(src)], idx[len(src):], len(nodes))
+    return pd.DataFrame({"node": nodes, "component": nodes[lab]})
+
+
 def _driver_finish(cur: DataFrame) -> DataFrame:
     """Collect the checkpointed edge set `cur` over Arrow, label it with
-    `_min_labels` and return (node, component) in cur's column type,
-    eagerly localCheckpoint'ed.  Node order is numpy's sort order, which
-    for strings is code-point order — the order of Spark's UTF-8 bytes."""
+    `min_components` and return (node, component) in cur's column type,
+    eagerly localCheckpoint'ed."""
     pdf = cur.toPandas()
-    n_edges = len(pdf)
-    nodes, idx = np.unique(
-        np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]),
-        return_inverse=True,
-    )
-    lab = _min_labels(idx[:n_edges], idx[n_edges:], len(nodes))
+    out = min_components(pdf["src"].to_numpy(), pdf["dst"].to_numpy())
     f = cur.schema["src"]
     schema = StructType([
         StructField("node", f.dataType, f.nullable),
         StructField("component", f.dataType, f.nullable),
     ])
-    out = pd.DataFrame({"node": nodes, "component": nodes[lab]})
     return cur.sparkSession.createDataFrame(out, schema).localCheckpoint(
         eager=True
     )

@@ -238,18 +238,6 @@ def containment_pairs(
         .select(F.col(id_col).alias("doc"), udf(F.col(text_col)).alias("fps"))
         .localCheckpoint(eager=True)
     )
-    return containment_pairs_from_fps(fps, min_share=min_share, fp_cap=fp_cap)
-
-
-def containment_pairs_from_fps(
-    fps: DataFrame,
-    min_share: float = 0.7,
-    fp_cap: int = 500,
-) -> DataFrame:
-    """The containment pair engine over an ALREADY-FINGERPRINTED table
-    (doc, fps array<long>) — the backend of `containment_pairs`.  The
-    caller owns materialization of `fps`: it is consumed four times
-    (sizes, inverted index, both self-join sides)."""
     inv = fps.select("doc", F.explode("fps").alias("fp"))
     hot = (
         inv.groupBy("fp").agg(F.count(F.lit(1)).alias("c"))

@@ -137,15 +137,13 @@ def simhash_pairs(
     n_bands: int = 4,
     id_col: str = "doc_id",
     sim_col: str = "simhash",
-    sig_bits: int = 64,
     band_cap: int = 2000,
-    salts: int = 16,
     track: list | None = None,
 ) -> DataFrame:
-    """SimHash near-dup candidates: `sig_bits`-bit fingerprints within
+    """SimHash near-dup candidates: 64-bit fingerprints within
     `max_bits` bit-Hamming distance.
 
-    Blocking on bit-bands: split the sig_bits into `n_bands` contiguous
+    Blocking on bit-bands: split the 64 bits into `n_bands` contiguous
     bands and equi-join on (band, value).  When max_bits < n_bands the
     pigeonhole principle makes blocking exhaustive (two fingerprints
     within max_bits must agree on at least one band); when
@@ -162,7 +160,7 @@ def simhash_pairs(
     - value size < 2                    -> no pairs
     - 2 <= size < salt_threshold        -> plain equi-join
     - salt_threshold <= size <= band_cap -> salted self-join (identical
-      pair set, the O(size^2) work spread over `salts` partitions)
+      pair set, the O(size^2) work spread over 16 salts)
     - size > band_cap                   -> demoted.  Demoted members
       still pair through their other, more selective bands; truly
       identical fingerprints (exact dups) should be collapsed upstream,
@@ -183,7 +181,8 @@ def simhash_pairs(
     """
     from humid_spark.operators.cc import CheckpointHandle
 
-    width = sig_bits // n_bands
+    width = 64 // n_bands
+    salts = 16
     bands = F.array(
         *[
             F.struct(

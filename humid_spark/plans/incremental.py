@@ -158,7 +158,13 @@ class ClusterDelta:
     (merge-on-read) instead of rewriting the corpus-sized cluster table.
     batch_pairs: the verified within-batch near pairs (lineage — these
     edges exist in no other surface).  The two row counts size `append`'s
-    writes and its manifest entry without a count job."""
+    writes and its manifest entry without a count job.
+
+    The batch graph behind the delta is labelled on the driver
+    (`DedupIndex.cluster_batch`: every side of it is batch-bounded, and
+    a graph over `cc.DRIVER_EDGE_BUDGET` edges raises), so the component
+    and merge tables are small eager checkpoints, released by
+    `release()`, and batch_pairs is a frame over the collected rows."""
 
     assignments: DataFrame  # (doc_id, cluster) for every fresh batch doc
     remap: DataFrame        # full replacement (old_cluster, new_cluster)
@@ -479,13 +485,19 @@ class DedupIndex:
         (src, dst) within-batch verified near pairs (the one edge family
         `dedup_batch` does not compute: two fresh docs that are near-dups
         of each other) plus (src, current cluster of dst) for every
-        cross near pair.  Connected components over that small graph give
-        each fresh doc its cluster = min(node) — and because existing
-        cluster ids ARE min member doc_ids, the invariant "cluster id =
-        min member doc id ever seen" is maintained exactly: a batch that
-        bridges two existing clusters emits a remap row for the larger
-        root, applied lazily at read time (`clusters`), never by rewriting
-        the corpus-sized map.
+        cross near pair.  Every side of that graph is batch-bounded
+        because every batch-side join is an unconditional broadcast
+        (`dedup_batch`), so it is collected and labelled ONCE on the
+        driver (`cc.min_components`, the union-find behind CC's driver
+        finish): each fresh doc gets cluster = min(node) of its
+        component — and because existing cluster ids ARE min member
+        doc_ids, the invariant "cluster id = min member doc id ever
+        seen" is maintained exactly: a batch that bridges two existing
+        clusters emits a remap row for the larger root, applied lazily at
+        read time (`clusters`), never by rewriting the corpus-sized map.
+        A batch graph of more than `cc.DRIVER_EDGE_BUDGET` edges raises
+        rather than falling back to distributed star rounds: split the
+        snapshot.
 
         Plan contract (same as `dedup_batch`): the cluster map is SCANNED
         once, probed map-side against the broadcast touched-doc set; every
@@ -498,65 +510,80 @@ class DedupIndex:
         representative — will not link to the cluster.  Chains through
         dropped docs are the price of not indexing duplicates; within one
         snapshot there is no divergence (pinned by tests)."""
+        import numpy as np
+
+        from humid_spark.operators import cc
+
         if not self.manifest.get("clusters"):
             raise ValueError(
                 "index has no cluster map: build(with_clusters=True)"
             )
         spark = res.batch_uniq.sparkSession
-        persisted: list = []
-
-        fresh_sigs = res.fresh.select("doc_id", "minhash")
+        track: list = []
         # the fresh band table was already materialized by dedup_batch's
         # cross tier — reuse it instead of paying the explode twice
         internal = lsh.verify_pairs(
-            lsh.candidate_pairs(res.fresh_buckets, self.cfg, track=persisted),
-            fresh_sigs,
+            lsh.candidate_pairs(res.fresh_buckets, self.cfg, track=track),
+            res.fresh.select("doc_id", "minhash"),
             self.cfg,
+        ).toPandas()
+        # the persisted bucket membership fed only this collect
+        for h in track:
+            h.unpersist()
+        near = res.near_pairs.select("src", "dst").toPandas()
+        # the touched docs' map rows; a touched doc without a map row is
+        # its own cluster (the `clusters_of` rule)
+        touched = res.near_pairs.select(F.col("dst").alias("doc_id"))
+        cur = (
+            self.clusters(spark)
+            .join(F.broadcast(touched), "doc_id", "semi")
+            .toPandas()
         )
-
-        touched = res.near_pairs.select(
-            F.col("dst").alias("doc_id")
-        ).distinct()
-        dstc = self.clusters_of(spark, touched, track=persisted).select(
-            F.col("doc_id").alias("dst"), F.col("cluster").alias("cur")
+        hit = near.merge(cur, left_on="dst", right_on="doc_id")
+        miss = near[~near["dst"].isin(cur["doc_id"])]
+        roots = np.concatenate(
+            [hit["cluster"].to_numpy(), miss["dst"].to_numpy()]
         )
-
-        edges = (
-            res.near_pairs.join(dstc, "dst")
-            .select("src", F.col("cur").alias("dst"))
-            .unionByName(internal.select("src", "dst"))
+        src = np.concatenate([
+            internal["src"].to_numpy(),
+            hit["src"].to_numpy(),
+            miss["src"].to_numpy(),
+        ])
+        if len(src) > cc.DRIVER_EDGE_BUDGET:
+            raise RuntimeError(
+                f"cluster_batch: the batch graph has {len(src)} edges, over "
+                f"the driver budget cc.DRIVER_EDGE_BUDGET = "
+                f"{cc.DRIVER_EDGE_BUDGET}; split the snapshot"
+            )
+        comp = cc.min_components(
+            src, np.concatenate([internal["dst"].to_numpy(), roots])
         )
-        comp = connected_components(edges, track=persisted)
+        # merges: a touched root whose component got a smaller id
+        merges = comp[
+            comp["node"].isin(roots) & (comp["component"] != comp["node"])
+        ].rename(columns={"node": "old_cluster", "component": "new_cluster"})
 
+        persisted: list = []
+
+        def materialize(pdf, schema: str) -> DataFrame:
+            df = spark.createDataFrame(pdf, schema).localCheckpoint(eager=True)
+            persisted.append(cc.CheckpointHandle(df))
+            return df
+
+        comp_df = materialize(comp, "node long, component long")
         assignments = (
             res.fresh.select("doc_id")
-            .join(comp, res.fresh["doc_id"] == comp["node"], "left")
+            .join(
+                F.broadcast(comp_df),
+                res.fresh["doc_id"] == comp_df["node"],
+                "left",
+            )
             .select(
                 "doc_id",
                 F.coalesce("component", "doc_id").alias("cluster"),
             )
         )
-        # merges: a touched root whose component got a smaller id.  The
-        # composition below references new_remap TWICE (the retarget join
-        # and the union), so the merges-sized table is checkpointed once,
-        # and its row count rides that job
-        from pyspark.sql import Observation
-
-        from humid_spark.operators.cc import CheckpointHandle
-
-        n_merges = Observation()
-        new_remap = (
-            dstc.select(F.col("cur").alias("node")).distinct()
-            .join(comp, "node")
-            .filter(F.col("component") != F.col("node"))
-            .select(
-                F.col("node").alias("old_cluster"),
-                F.col("component").alias("new_cluster"),
-            )
-            .observe(n_merges, F.count(F.lit(1)).alias("rows"))
-            .localCheckpoint(eager=True)
-        )
-        persisted.append(CheckpointHandle(new_remap))
+        new_remap = materialize(merges, self._REMAP_SCHEMA)
         # compose with the current remap so the stored table stays fully
         # root-resolved (one broadcast join resolves any doc at read time,
         # no chains): old entries whose target just merged follow it.
@@ -588,29 +615,21 @@ class DedupIndex:
         return ClusterDelta(
             assignments=assignments,
             remap=remap,
-            batch_pairs=internal,
+            batch_pairs=spark.createDataFrame(
+                internal, "src long, dst long, est_jaccard double"
+            ),
             assignment_rows=res.fresh_rows,
-            remap_rows=self.manifest.get("remap_rows", 0)
-            + int(n_merges.get["rows"]),
+            remap_rows=self.manifest.get("remap_rows", 0) + len(merges),
             persisted=persisted,
         )
 
-    def clusters_of(
-        self,
-        spark: SparkSession,
-        docs: DataFrame,
-        *,
-        track: list | None = None,
-    ) -> DataFrame:
+    def clusters_of(self, spark: SparkSession, docs: DataFrame) -> DataFrame:
         """Point lookup: the current cluster of each ``docs.doc_id``
         (own id when the doc predates the cluster tier or was never seen).
 
         Plan contract: ONE map-side probe of the resolved cluster-map scan
         against the broadcast lookup set — the corpus-sized map never
-        enters an exchange.  With ``track`` the (lookup-bounded) hit set is
-        persisted — it feeds two branches (hits + own-id defaults) and
-        would otherwise scan the map twice — and the handle appended for
-        the caller to release."""
+        enters an exchange."""
         if not self.manifest.get("clusters"):
             raise ValueError(
                 "index has no cluster map: build(with_clusters=True)"
@@ -619,11 +638,6 @@ class DedupIndex:
         present = self.clusters(spark).join(
             F.broadcast(keys), "doc_id", "semi"
         )
-        if track is not None:
-            from pyspark import StorageLevel
-
-            present = present.persist(StorageLevel.MEMORY_AND_DISK)
-            track.append(present)
         hit_ids = present.select("doc_id")
         missing = keys.join(F.broadcast(hit_ids), "doc_id", "anti").withColumn(
             "cluster", F.col("doc_id")

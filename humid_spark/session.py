@@ -158,6 +158,14 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # whole-stage codegen cache (JVM-wide, static): the default 100
+        # classes is smaller than one pass's plan set — a web pass
+        # compiles ~139 classes and a 200-page index snapshot ~150 — so
+        # every repeated pass evicted and recompiled its own classes
+        # (0.6-1.0 s of Janino time per pass plus JIT warm-up on 4 vCPUs).
+        # 1000 holds both workloads' sets with room for the
+        # delete/compact/read plans
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

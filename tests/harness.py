@@ -12,7 +12,7 @@ import duckdb
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
+    "documents"
 ).split()
 
 

@@ -439,5 +439,37 @@ def test_snapshot_job_budget(cidx, spark):
     delta.release()
     # the batch merged a cluster, so the remap write is in the count
     assert cidx.manifest["remap_rows"] == 1
-    # measured on this fixture: dedup 22, cluster 30, append 6
-    assert sum(jobs.values()) <= 58, jobs
+    # measured on this fixture: dedup 22, cluster 18 (its batch graph is
+    # labelled on the driver), append 6
+    assert sum(jobs.values()) <= 46, jobs
+
+
+def test_cluster_batch_over_driver_budget_fails_loudly(
+    cidx, spark, monkeypatch
+):
+    """cluster_batch labels its batch graph on the driver and has no
+    star-round fallback: a graph over cc.DRIVER_EDGE_BUDGET raises with a
+    message naming the limit, and one at the budget is labelled."""
+    from humid_spark.operators import cc
+
+    batch = _pages(spark, [
+        # two cross edges (to BASE and its corpus near-dup) and one
+        # internal edge (f1 - f2): a graph of three edges
+        ("http://b/crossnear", BASE + " tail words"),
+        ("http://b/f1", FRESH_A),
+        ("http://b/f2", FRESH_A + " appended tail"),
+    ])
+    res = cidx.dedup_batch(batch)
+    try:
+        monkeypatch.setattr(cc, "DRIVER_EDGE_BUDGET", 2)
+        with pytest.raises(RuntimeError, match="DRIVER_EDGE_BUDGET = 2"):
+            cidx.cluster_batch(res)
+        monkeypatch.setattr(cc, "DRIVER_EDGE_BUDGET", 3)
+        delta = cidx.cluster_batch(res)
+        f1 = _doc_id("http://b/f1", spark)
+        f2 = _doc_id("http://b/f2", spark)
+        got = {r["doc_id"]: r["cluster"] for r in delta.assignments.collect()}
+        assert got[f1] == got[f2] == min(f1, f2)
+        delta.release()
+    finally:
+        res.release()

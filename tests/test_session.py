@@ -136,3 +136,33 @@ def test_sessions_from_two_trees_share_tmpdir(tmp_path):
     assert za != zb
     zips = [f for f in os.listdir(shared) if f.startswith("humid_spark_")]
     assert sorted(zips) == sorted([za, zb])
+
+
+def test_repeated_web_pass_compiles_no_class(spark, tmp_path):
+    """Spark's whole-stage codegen cache holds a web pass's plan set: a
+    second identical pass (containment on, dedup table written) compiles
+    no class.  Spark's default cache of 100 classes is smaller than one
+    pass's ~130, so every repeated pass evicted and recompiled them all."""
+    from humid_spark.config import DedupConfig
+    from humid_spark.plans.webdedup import run_web_pipeline
+    from humid_spark.sources.pages import fx_webtext, to_spark
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    src, out = str(tmp_path / "pages"), str(tmp_path / "dedup")
+    to_spark(spark, fx_webtext(n_seeds=20, seed=5)).write.parquet(src)
+    cfg = DedupConfig(use_containment=True)
+
+    def web_pass() -> int:
+        before = compiled()
+        res = run_web_pipeline(spark.read.parquet(src), cfg)
+        res.dedup.write.mode("overwrite").parquet(out)
+        res.release(checkpoints=True)
+        return compiled() - before
+
+    web_pass()
+    assert compiled() > 0  # the counter is live in this JVM
+    assert web_pass() == 0
