@@ -204,43 +204,6 @@ def _band_join_duck() -> str:
     )
 
 
-# ---------------------------------------------------------------------------
-# multimodal long-form fold (round 6, VERDICT r5 item 1): the per-modality
-# stats tables stack into ONE recorded query each for decode / resize /
-# near-dup by unpivoting every column to (modality, url, metric, value)
-# rows — no information loss (every column survives as a metric row, values
-# compared as exact strings: integer casts are canonical and booleans
-# render 'true'/'false' identically in Spark and DuckDB).
-# ---------------------------------------------------------------------------
-
-_IMG_STATS_COLS = [
-    "width", "height", "format", "decoded", "channels",
-    "r_sum", "g_sum", "b_sum",
-]
-_AUD_STATS_COLS = [
-    "decoded", "n_channels", "sample_rate", "n_samples",
-    "duration_ms", "sumsq", "zero_crossings",
-]
-_IMG_RESIZE_COLS = ["width", "height", "r_sum", "g_sum", "b_sum"]
-
-
-def _unpivot_modal(df: DataFrame, modality: str, metrics: list[str]) -> DataFrame:
-    pairs = ", ".join(f"'{m}', cast({m} as string)" for m in metrics)
-    return df.selectExpr(
-        f"'{modality}' as modality",
-        "url",
-        f"stack({len(metrics)}, {pairs}) as (metric, value)",
-    )
-
-
-def _unpivot_modal_sql(inner: str, modality: str, metrics: list[str]) -> str:
-    return " UNION ALL ".join(
-        f"SELECT '{modality}' AS modality, url, '{m}' AS metric, "
-        f"CAST({m} AS VARCHAR) AS value FROM ({inner})"
-        for m in metrics
-    )
-
-
 _SQL_SHINGLES = (
     f"SELECT doc_id, list_distinct(list_transform("
     f"generate_series(1, greatest(1, length(text) - {MH_K - 1})), "
@@ -1485,274 +1448,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["directional_invariants_n12"] = directional_invariants_n12
 
-    # --- multimodal: exact dedup on a BINARY payload (A1 over an opaque
-    #     blob column; JVM-side sha2, no UDF).  The driver tables carry no
-    #     binary column, so the text bytes stand in as the blob — the
-    #     operator under test is humid_spark.functions.multimodal.
-    #     binary_exact_dups, unchanged. ---
-    def binary_dups(s, d):
-        from humid_spark.functions.multimodal import binary_exact_dups
-
-        docs = _t(s, d, "documents").select(
-            F.concat(F.lit("doc://"), F.col("doc_id").cast("string")).alias("url"),
-            F.col("text").cast("binary").alias("blob"),
-        )
-        return binary_exact_dups(docs, blob_col="blob")
-
-    q["binary_exact_dups"] = binary_dups
-
-    # --- multimodal: REAL image decode (VERDICT r4 item 6).  The driver
-    #     tables carry no image column, so the query PLANTS deterministic
-    #     P6 PPM blobs (dims and every pixel byte a pure function of
-    #     doc_id) and pushes them through the engine's stdlib decoder
-    #     (multimodal.decode_ppm via image_stats — real header parse +
-    #     raster read, decoded=True).  The oracle never builds a blob: it
-    #     computes the SAME dims and exact integer channel sums straight
-    #     from the planting formula, so a decoder that misreads header,
-    #     stride or channel order hash-mismatches. ---
-    def image_decode_stats(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.multimodal import image_stats
-
-        # doc_id < 200: formula-pixel PPMs through the netpbm decoder;
-        # doc_id in [200, 280): 8x8-BLOCK-CONSTANT grayscale baseline
-        # JPEGs (round 6) through the REAL stdlib Huffman+IDCT decoder —
-        # block-constant + all-ones quant round-trips BIT-EXACTLY
-        # (functions/jpeg.py docstring), so the oracle replays the pixel
-        # sums from the block formula v = (did*31 + by*7 + bx*3) % 200.
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 280
-        )
-
-        def gen(batches):
-            from humid_spark.functions.jpeg import encode_jpeg
-
-            for pdf in batches:
-                urls, blobs = [], []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    urls.append(str(did))
-                    if did < 200:
-                        w, h = 4 + did % 5, 3 + did % 3
-                        px = bytes(
-                            (did * 31 + y * 7 + x * 3 + c * 11) % 256
-                            for y in range(h)
-                            for x in range(w)
-                            for c in range(3)
-                        )
-                        blobs.append(b"P6\n%d %d\n255\n" % (w, h) + px)
-                        continue
-                    bw, bh = 2 + did % 3, 1 + did % 2
-                    by, bx = _np.mgrid[0:bh, 0:bw]
-                    bv = (did * 31 + by * 7 + bx * 3) % 200
-                    gray = bv.repeat(8, axis=0).repeat(8, axis=1)
-                    blobs.append(encode_jpeg(gray.astype(_np.uint8)))
-                yield _pd.DataFrame({"url": urls, "blob": blobs})
-
-        planted = ids.mapInPandas(
-            gen, "url string, blob binary"
-        )
-        return image_stats(planted, blob_col="blob")
-
-
-    # --- audio: REAL WAV decode + exact integer features (round 5).
-    #     Planted 16-bit PCM blobs (every sample a pure function of
-    #     doc_id) go through the engine's stdlib RIFF chunk walker
-    #     (functions/audio.py); the oracle computes the same
-    #     n_samples / energy (sum of squares) / zero-crossings straight
-    #     from the planting formula — a decoder that misparses fmt,
-    #     drops frames or mis-signs samples hash-mismatches. ---
-    def audio_decode_stats(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.audio import audio_stats, encode_wav
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 200
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                urls, blobs = [], []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    n = 200 + did % 100
-                    rate = 8000 + (did % 3) * 4000
-                    sm = ((_np.arange(n, dtype=_np.int64) * 101 + did * 37)
-                          % 2001 - 1000).astype(_np.int16)
-                    urls.append(str(did))
-                    blobs.append(encode_wav(sm, rate))
-                yield _pd.DataFrame({"url": urls, "blob": blobs})
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        return audio_stats(planted, blob_col="blob")
-
-
-    # --- acoustic near-dup (round 5): planted PCM clips (sample
-    #     v(did,i) = (did*37 + i*101) % 2001 - 1000, n = 130 + did%70)
-    #     plus volume-DOUBLED copies (exact at |v| <= 1000, id
-    #     's<did>') flow through the REAL chain — WAV decode -> 65-
-    #     segment energy-envelope fingerprint (bit k iff E[k+1] >
-    #     E[k]) -> the capped SimHash band join.  max_bits=3 <
-    #     n_bands=4 keeps blocking pigeonhole-EXHAUSTIVE; the oracle
-    #     replays segment energies from the formula (segment of sample
-    #     i is (65*i + 64) // n — the floor-boundary inverse), packs
-    #     the envelope bits as HUGEINT with the signed wrap, and
-    #     brute-forces hamming <= 3.  Doubled copies land at distance
-    #     0 because every energy scales by exactly 4. ---
-    def audio_fp_near_dups(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.audio import audio_near_dups, encode_wav
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 150
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    n = 130 + did % 70
-                    sm = ((_np.arange(n, dtype=_np.int64) * 101 + did * 37)
-                          % 2001 - 1000).astype(_np.int16)
-                    rows.append((str(did), encode_wav(sm, 8000)))
-                    if did % 5 == 0:
-                        rows.append(
-                            ("s" + str(did), encode_wav(sm * 2, 8000))
-                        )
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        return audio_near_dups(planted, blob_col="blob").withColumn(
-            "bit_dist", F.col("bit_dist").cast("long")
-        )
-
-
-    # --- perceptual image dedup (round 5): planted 16x16 PPMs (pixel =
-    #     (doc_id*31 + y*7 + x*3 + c*11) % 200) plus brightness-shifted
-    #     copies (+8 on every pixel, id 's<doc_id>') flow through the
-    #     REAL chain — stdlib decode -> all-integer 64-bit average hash
-    #     -> the engine's capped SimHash band join.  max_bits=3 <
-    #     n_bands=4 keeps the blocking pigeonhole-EXHAUSTIVE, so the
-    #     oracle replays the aHash from the planting formula (block-sum
-    #     cross-multiplication, HUGEINT bit packing, signed int64 wrap)
-    #     and brute-forces hamming <= 3 — the shifted copies land at
-    #     distance 0 because aHash is provably brightness-shift
-    #     invariant (both sides of blk*npx > total*pb shift equally). ---
-    def image_phash_near_dups(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.multimodal import image_near_dups
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 120
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    y, x, c = _np.meshgrid(
-                        _np.arange(16), _np.arange(16), _np.arange(3),
-                        indexing="ij",
-                    )
-                    px = ((did * 31 + y * 7 + x * 3 + c * 11) % 200
-                          ).astype(_np.uint8)
-                    hdr = b"P6\n16 16\n255\n"
-                    rows.append((str(did), hdr + px.tobytes()))
-                    if did % 4 == 0:
-                        rows.append(("s" + str(did),
-                                     hdr + (px + 8).tobytes()))
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        return image_near_dups(planted, blob_col="blob").withColumn(
-            "bit_dist", F.col("bit_dist").cast("long")
-        )
-
-
-    # --- exact-integer resize (round 5): the planted 16x16 PPMs resize
-    #     to 8x8 by block mean (output pixel = floor(2x2-block sum / 4)),
-    #     re-encode as P6, and ROUND-TRIP through the engine's own
-    #     decoder into channel sums — hash-checking decode, the resize
-    #     arithmetic, and encode at once.  The oracle computes the block
-    #     means straight from the pixel formula. ---
-    def image_resize_stats(s, d):
-        import numpy as _np
-        import pandas as _pd
-
-        from humid_spark.functions.multimodal import image_resize, image_stats
-
-        ids = _t(s, d, "documents").select("doc_id").filter(
-            F.col("doc_id") < 150
-        )
-
-        def gen(batches):
-            for pdf in batches:
-                rows = []
-                for did in pdf["doc_id"]:
-                    did = int(did)
-                    y, x, c = _np.meshgrid(
-                        _np.arange(16), _np.arange(16), _np.arange(3),
-                        indexing="ij",
-                    )
-                    px = ((did * 31 + y * 7 + x * 3 + c * 11) % 200
-                          ).astype(_np.uint8)
-                    rows.append((str(did), b"P6\n16 16\n255\n" + px.tobytes()))
-                yield _pd.DataFrame(rows, columns=["url", "blob"])
-
-        planted = ids.mapInPandas(gen, "url string, blob binary")
-        resized = image_resize(planted, out_w=8, out_h=8, blob_col="blob")
-        return image_stats(resized, blob_col="resized").select(
-            "url", "width", "height", "r_sum", "g_sum", "b_sum"
-        )
-
-
-    # --- round-6 folds: the whole perceptual tier in THREE recorded
-    #     queries (decode / near-dup / resize), every per-modality column
-    #     preserved as a long-form metric row.  Both real codec paths
-    #     (PPM+JPEG/WAV), both fingerprint kernels (aHash / energy
-    #     envelope) and the image resize path run — only the row shape
-    #     changed. ---
-    def multimodal_decode_stats(s, d):
-        return (
-            _unpivot_modal(image_decode_stats(s, d), "image", _IMG_STATS_COLS)
-            .unionByName(
-                _unpivot_modal(audio_decode_stats(s, d), "audio",
-                               _AUD_STATS_COLS)
-            )
-        )
-
-    q["multimodal_decode_stats"] = multimodal_decode_stats
-
-    def multimodal_near_dups(s, d):
-        def tag(df, m):
-            return df.select(
-                F.lit(m).alias("modality"), "src", "dst", "bit_dist"
-            )
-
-        return (
-            tag(image_phash_near_dups(s, d), "image")
-            .unionByName(tag(audio_fp_near_dups(s, d), "audio"))
-        )
-
-    q["multimodal_near_dups"] = multimodal_near_dups
-
-    def multimodal_resize_stats(s, d):
-        return _unpivot_modal(
-            image_resize_stats(s, d), "image", _IMG_RESIZE_COLS
-        )
-
-    q["multimodal_resize_stats"] = multimodal_resize_stats
-
     # --- exact substring duplicates (the north-star's suffix-array pass;
     #     winnowing-candidate + contains() verify, recall-1 argument in
     #     humid_spark.operators.containment.substring_dups).  The word-soup
@@ -1780,16 +1475,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {k: q[k] for k in _ORDER}
 
 
-# Registration order of the 42 queries; all of them fit the first-50
+# Registration order of the 38 queries; all of them fit the first-50
 # record.
 _ORDER = [
-    # perceptual tier (image/audio decode, near-dup and resize folds)
-    "multimodal_decode_stats",
-    "multimodal_near_dups",
-    "multimodal_resize_stats",
-    # binary exact dedup, containment, substring and
-    # directional-clustering checks
-    "binary_exact_dups",
+    # containment, substring and directional-clustering checks
     "containment_pairs",
     "substring_dups",
     "directional_clusters",
@@ -2423,255 +2112,6 @@ def oracle_sql() -> dict[str, str]:
                CAST(0 AS BIGINT) AS seed_bad
         FROM ({_sql_uniq(N12)})
     """
-
-    o["binary_exact_dups"] = (
-        "SELECT sha256(text) AS sha256, count(*) AS n, "
-        "min('doc://' || CAST(doc_id AS VARCHAR)) AS keep_url "
-        "FROM documents WHERE text IS NOT NULL GROUP BY 1"
-    )
-
-    # Channel sums computed from the planting formula, never from bytes:
-    # sum over (x, y) of (doc_id*31 + y*7 + x*3 + c*11) % 256 per channel.
-    _img_decode_sql = """
-        WITH ids AS (
-          SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 3 AS h
-          FROM documents WHERE doc_id < 200
-        ),
-        px AS (
-          SELECT i.doc_id, i.w, i.h, y.y, x.x
-          FROM ids i,
-               unnest(generate_series(0, i.h - 1)) AS y(y),
-               unnest(generate_series(0, i.w - 1)) AS x(x)
-        ),
-        sums AS (
-          SELECT doc_id, any_value(w) AS w, any_value(h) AS h,
-            sum((doc_id * 31 + y * 7 + x * 3) % 256) AS r_sum,
-            sum((doc_id * 31 + y * 7 + x * 3 + 11) % 256) AS g_sum,
-            sum((doc_id * 31 + y * 7 + x * 3 + 22) % 256) AS b_sum
-          FROM px GROUP BY doc_id
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS url,
-               CAST(w AS INTEGER) AS width, CAST(h AS INTEGER) AS height,
-               'PPM' AS format, TRUE AS decoded,
-               CAST(3 AS INTEGER) AS channels,
-               CAST(r_sum AS BIGINT) AS r_sum,
-               CAST(g_sum AS BIGINT) AS g_sum,
-               CAST(b_sum AS BIGINT) AS b_sum
-        FROM sums
-        UNION ALL
-        SELECT url, width, height, format, decoded, channels,
-               r_sum, g_sum, b_sum
-        FROM (
-          WITH jids AS (
-            SELECT doc_id, 2 + doc_id % 3 AS bw, 1 + doc_id % 2 AS bh
-            FROM documents WHERE doc_id >= 200 AND doc_id < 280
-          ),
-          blocks AS (
-            SELECT j.doc_id, j.bw, j.bh,
-                   (j.doc_id * 31 + by.by * 7 + bx.bx * 3) % 200 AS v
-            FROM jids j,
-                 unnest(generate_series(0, j.bh - 1)) AS by(by),
-                 unnest(generate_series(0, j.bw - 1)) AS bx(bx)
-          ),
-          agg AS (
-            SELECT doc_id, any_value(bw) AS bw, any_value(bh) AS bh,
-                   CAST(64 * sum(v) AS BIGINT) AS s
-            FROM blocks GROUP BY doc_id
-          )
-          SELECT CAST(doc_id AS VARCHAR) AS url,
-                 CAST(bw * 8 AS INTEGER) AS width,
-                 CAST(bh * 8 AS INTEGER) AS height,
-                 'JPEG' AS format, TRUE AS decoded,
-                 CAST(1 AS INTEGER) AS channels,
-                 s AS r_sum,
-                 CAST(NULL AS BIGINT) AS g_sum,
-                 CAST(NULL AS BIGINT) AS b_sum
-          FROM agg
-        )
-    """
-
-    # Audio features computed from the planting formula, never from
-    # bytes: sample v(doc_id, i) = (doc_id*37 + i*101) % 2001 - 1000.
-    _aud_decode_sql = """
-        WITH ids AS (
-          SELECT doc_id, 200 + doc_id % 100 AS n,
-                 8000 + (doc_id % 3) * 4000 AS rate
-          FROM documents WHERE doc_id < 200
-        ),
-        s AS (
-          SELECT i.doc_id, i.n, i.rate, t.i,
-                 (i.doc_id * 37 + t.i * 101) % 2001 - 1000 AS v
-          FROM ids i, unnest(generate_series(0, i.n - 1)) AS t(i)
-        ),
-        lagged AS (
-          SELECT *, lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS prev
-          FROM s
-        ),
-        agg AS (
-          SELECT doc_id, any_value(n) AS n, any_value(rate) AS rate,
-                 sum(v * v) AS sumsq,
-                 sum(CASE WHEN prev IS NOT NULL
-                          AND ((v < 0) <> (prev < 0))
-                     THEN 1 ELSE 0 END) AS zc
-          FROM lagged GROUP BY doc_id
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS url, TRUE AS decoded,
-               CAST(1 AS INTEGER) AS n_channels,
-               CAST(rate AS INTEGER) AS sample_rate,
-               CAST(n AS BIGINT) AS n_samples,
-               CAST(n * 1000 // rate AS BIGINT) AS duration_ms,
-               CAST(sumsq AS BIGINT) AS sumsq,
-               CAST(zc AS BIGINT) AS zero_crossings
-        FROM agg
-    """
-
-    # Envelope fingerprint replayed from the sample formula: segment of
-    # sample i at clip length n is (65*i + 64) // n (inverse of the
-    # floor boundary k*n//65); energies sum v^2 per segment (the scaled
-    # copy uses 2v, so every energy is exactly 4x); bit k iff
-    # E[k+1] > E[k]; HUGEINT packing, signed wrap, hamming <= 3 pairs.
-    _aud_nd_sql = """
-        WITH clips AS (
-          SELECT CAST(doc_id AS VARCHAR) AS url, doc_id,
-                 130 + doc_id % 70 AS n, 1 AS scale
-          FROM documents WHERE doc_id < 150
-          UNION ALL
-          SELECT 's' || CAST(doc_id AS VARCHAR) AS url, doc_id,
-                 130 + doc_id % 70 AS n, 2 AS scale
-          FROM documents WHERE doc_id < 150 AND doc_id % 5 = 0
-        ),
-        s AS (
-          SELECT c.url, (65 * t.i + 64) // c.n AS seg,
-                 ((c.doc_id * 37 + t.i * 101) % 2001 - 1000) * c.scale AS v
-          FROM clips c, unnest(generate_series(0, c.n - 1)) AS t(i)
-        ),
-        e AS (
-          SELECT url, seg, sum(v * v) AS energy FROM s GROUP BY url, seg
-        ),
-        delta AS (
-          SELECT url, seg,
-                 lead(energy) OVER (PARTITION BY url ORDER BY seg) AS nxt,
-                 energy
-          FROM e
-        ),
-        fp AS (
-          SELECT url,
-                 sum(CASE WHEN nxt > energy
-                          THEN CAST(1 AS HUGEINT) << seg
-                          ELSE CAST(0 AS HUGEINT) END) AS p
-          FROM delta WHERE seg < 64 GROUP BY url
-        ),
-        sh AS (
-          SELECT url,
-                 CAST(CASE WHEN p >= CAST(1 AS HUGEINT) << 63
-                           THEN p - (CAST(1 AS HUGEINT) << 64)
-                           ELSE p END AS BIGINT) AS afp
-          FROM fp
-        )
-        SELECT a.url AS src, b.url AS dst,
-               CAST(bit_count(xor(a.afp, b.afp)) AS BIGINT) AS bit_dist
-        FROM sh a JOIN sh b ON a.url < b.url
-        WHERE bit_count(xor(a.afp, b.afp)) <= 3
-    """
-
-    # Resized-image channel sums from the pixel formula: output pixel
-    # (oy, ox, c) = floor(sum of the 2x2 input block / 4); sums per
-    # channel over the 8x8 output.  width/height echo the SOURCE dims.
-    _img_resize_sql = """
-        WITH ids AS (
-          SELECT doc_id FROM documents WHERE doc_id < 150
-        ),
-        px AS (
-          SELECT i.doc_id, y.y // 2 AS oy, x.x // 2 AS ox, c.c,
-                 (i.doc_id*31 + y.y*7 + x.x*3 + c.c*11) % 200 AS v
-          FROM ids i,
-               unnest(generate_series(0, 15)) AS y(y),
-               unnest(generate_series(0, 15)) AS x(x),
-               unnest([0, 1, 2]) AS c(c)
-        ),
-        blocks AS (
-          SELECT doc_id, oy, ox, c, sum(v) // 4 AS out_v
-          FROM px GROUP BY doc_id, oy, ox, c
-        ),
-        sums AS (
-          SELECT doc_id,
-                 sum(CASE WHEN c = 0 THEN out_v ELSE 0 END) AS r_sum,
-                 sum(CASE WHEN c = 1 THEN out_v ELSE 0 END) AS g_sum,
-                 sum(CASE WHEN c = 2 THEN out_v ELSE 0 END) AS b_sum
-          FROM blocks GROUP BY doc_id
-        )
-        SELECT CAST(doc_id AS VARCHAR) AS url,
-               CAST(8 AS INTEGER) AS width, CAST(8 AS INTEGER) AS height,
-               CAST(r_sum AS BIGINT) AS r_sum,
-               CAST(g_sum AS BIGINT) AS g_sum,
-               CAST(b_sum AS BIGINT) AS b_sum
-        FROM sums
-    """
-
-    # aHash replayed from the pixel formula: gray = 3-channel sum, 2x2
-    # block sums (16x16 image, 8x8 grid), bit iff bsum*64 > total
-    # (cross-multiplied block-mean vs global-mean), HUGEINT packing with
-    # the signed int64 wrap; pairs brute-forced at hamming <= 3 (equal to
-    # the engine's band blocking by pigeonhole, max_bits < n_bands).
-    _img_nd_sql = """
-        WITH imgs AS (
-          SELECT CAST(doc_id AS VARCHAR) AS url, doc_id, 0 AS shift
-          FROM documents WHERE doc_id < 120
-          UNION ALL
-          SELECT 's' || CAST(doc_id AS VARCHAR) AS url, doc_id, 8 AS shift
-          FROM documents WHERE doc_id < 120 AND doc_id % 4 = 0
-        ),
-        px AS (
-          SELECT im.url, y.y, x.x,
-              ((im.doc_id*31 + y.y*7 + x.x*3) % 200 + im.shift)
-            + ((im.doc_id*31 + y.y*7 + x.x*3 + 11) % 200 + im.shift)
-            + ((im.doc_id*31 + y.y*7 + x.x*3 + 22) % 200 + im.shift)
-              AS gray
-          FROM imgs im,
-               unnest(generate_series(0, 15)) AS y(y),
-               unnest(generate_series(0, 15)) AS x(x)
-        ),
-        tot AS (SELECT url, sum(gray) AS total FROM px GROUP BY url),
-        blk AS (
-          SELECT url, y // 2 AS by, x // 2 AS bx, sum(gray) AS bsum
-          FROM px GROUP BY url, y // 2, x // 2
-        ),
-        ah AS (
-          SELECT b.url,
-                 sum(CASE WHEN b.bsum * 64 > t.total
-                          THEN CAST(1 AS HUGEINT) << (b.by * 8 + b.bx)
-                          ELSE CAST(0 AS HUGEINT) END) AS p
-          FROM blk b JOIN tot t USING (url)
-          GROUP BY b.url
-        ),
-        sh AS (
-          SELECT url,
-                 CAST(CASE WHEN p >= CAST(1 AS HUGEINT) << 63
-                           THEN p - (CAST(1 AS HUGEINT) << 64)
-                           ELSE p END AS BIGINT) AS ahash
-          FROM ah
-        )
-        SELECT a.url AS src, b.url AS dst,
-               CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS bit_dist
-        FROM sh a JOIN sh b ON a.url < b.url
-        WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
-    """
-
-    o["multimodal_decode_stats"] = (
-        _unpivot_modal_sql(_img_decode_sql, "image", _IMG_STATS_COLS)
-        + " UNION ALL "
-        + _unpivot_modal_sql(_aud_decode_sql, "audio", _AUD_STATS_COLS)
-    )
-
-    o["multimodal_near_dups"] = (
-        f"SELECT 'image' AS modality, src, dst, bit_dist FROM ({_img_nd_sql}) "
-        f"UNION ALL "
-        f"SELECT 'audio' AS modality, src, dst, bit_dist FROM ({_aud_nd_sql})"
-    )
-
-    o["multimodal_resize_stats"] = _unpivot_modal_sql(
-        _img_resize_sql, "image", _IMG_RESIZE_COLS
-    )
 
     o["substring_dups"] = """
         WITH aug AS (

@@ -1,6 +1,6 @@
 """Multimodal column handling (training-data-pipeline extra).
 
-Images and audio are opaque `binary` columns with typed metadata.  The
+Images are opaque `binary` columns with typed metadata.  The
 Spark-side plumbing — schemas, Arrow batch shapes, mapInPandas signatures,
 partition-size hygiene for large blobs — is real and tested.
 
@@ -176,9 +176,7 @@ def decode_png(blob: bytes) -> tuple[int, int, str, np.ndarray]:
     return w, h, "PNG", px
 
 
-from humid_spark.functions.jpeg import decode_jpeg  # noqa: E402
-
-_STDLIB_DECODERS = (decode_png, decode_bmp, decode_ppm, decode_jpeg)
+_STDLIB_DECODERS = (decode_png, decode_bmp, decode_ppm)
 
 
 def decode_image(blob: bytes) -> tuple[int, int, str, np.ndarray] | None:
@@ -315,9 +313,8 @@ def encode_ppm(px: np.ndarray) -> bytes:
 def resize_block_mean(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     """EXACT-integer resize: the output pixel (oy, ox) is the floor mean
     of the input block [oy*h//out_h, (oy+1)*h//out_h) x [ox*w//out_w,
-    (ox+1)*w//out_w) — the same floor-boundary grid rule as `ahash64`
-    and the audio envelope segments, so a SQL oracle replays it with
-    sum(v) // block_px per block.  Downsample-only (raises ValueError
+    (ox+1)*w//out_w) — a floor-boundary grid, so a SQL oracle can replay
+    it with sum(v) // block_px per block.  Downsample-only (raises ValueError
     when a target dimension exceeds the source — block-mean semantics
     need >= 1 source pixel per output pixel)."""
     a = np.asarray(px, dtype=np.int64)
@@ -373,101 +370,3 @@ def image_resize(df: DataFrame, out_w: int, out_h: int,
             )
 
     return cols.mapInPandas(rs, RESIZE_SCHEMA)
-
-
-def ahash64(px: np.ndarray) -> int:
-    """64-bit average hash (aHash) of a decoded image, ALL-INTEGER:
-
-    gray = r+g+b (sum, not mean — stays integral), the image splits into
-    an 8x8 grid on floor boundaries, and bit (by*8+bx) is set iff the
-    block's mean gray exceeds the global mean — compared exactly via
-    cross-multiplication (block_sum * total_px > total_sum * block_px),
-    never a float division.  Brightness-shift invariant by construction:
-    adding a constant to every pixel shifts both sides equally.  Returns
-    the SIGNED int64 (bit 63 wraps negative) so the value drops straight
-    into a LongType column and the engine's 64-bit SimHash band join.
-
-    Requires height >= 8 and width >= 8 (raises ValueError otherwise —
-    tiny thumbnails carry no 8x8 structure)."""
-    gray = px[:, :, : min(3, px.shape[2])].astype(np.int64).sum(axis=2)
-    h, w = gray.shape
-    if h < 8 or w < 8:
-        raise ValueError("image smaller than the 8x8 hash grid")
-    ys = [y * h // 8 for y in range(8)]
-    xs = [x * w // 8 for x in range(8)]
-    blk = np.add.reduceat(np.add.reduceat(gray, ys, axis=0), xs, axis=1)
-    pb = np.outer(np.diff(ys + [h]), np.diff(xs + [w])).astype(np.int64)
-    total, npx = int(gray.sum()), h * w
-    bits = (blk * npx > total * pb).astype(np.uint64).ravel()  # by*8+bx order
-    packed = int((bits << np.arange(64, dtype=np.uint64)).sum())
-    return packed - (1 << 64) if packed >= (1 << 63) else packed
-
-
-AHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("ahash", T.LongType(), True),
-    ]
-)
-
-
-def image_ahashes(df: DataFrame, blob_col: str = "html",
-                  url_col: str = "url") -> DataFrame:
-    """(url, ahash) for every decodable blob >= 8x8; undecodable or tiny
-    blobs yield null (callers filter — they cannot be perceptually
-    hashed, only binary-exact-deduped)."""
-    from humid_spark.partitioning import spread
-
-    # adaptive: a 1-2 partition blob source (single-row-group file, a
-    # generator chain) would pin the decode to 1-2 cores; well-partitioned
-    # blob corpora pass through untouched and never shuffle
-    cols = spread(
-        df.select(F.col(url_col).alias("url"), F.col(blob_col).alias("blob"))
-    )
-
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, blob in zip(pdf["url"], pdf["blob"]):
-                got = decode_image(blob) if blob is not None else None
-                ah = None
-                if got is not None:
-                    try:
-                        ah = ahash64(got[3])
-                    except ValueError:
-                        ah = None
-                rows.append((url, ah))
-            yield pd.DataFrame(rows, columns=["url", "ahash"])
-
-    return cols.mapInPandas(hashes, AHASH_SCHEMA)
-
-
-def image_near_dups(
-    df: DataFrame,
-    blob_col: str = "html",
-    url_col: str = "url",
-    max_bits: int = 3,
-    n_bands: int = 4,
-    band_cap: int = 2000,
-    track: list | None = None,
-) -> DataFrame:
-    """Perceptual near-duplicate image detection — the embedding-dedup
-    shape applied to pixels: REAL decode (stdlib codecs) -> 64-bit aHash
-    (one narrow Arrow pass; blobs never shuffle) -> the engine's capped +
-    salted SimHash band join (operators/lsh.simhash_pairs) -> pairs
-    within `max_bits` bit-Hamming distance.  With the default
-    max_bits < n_bands the blocking is pigeonhole-EXHAUSTIVE (identical
-    recall to brute-force hamming), yet candidate generation stays the
-    skew-safe band equi-join.  Returns (src, dst, bit_dist) with
-    src < dst; re-encoded/brightness-shifted copies land at distance 0-2
-    where byte-level sha2 dedup sees nothing."""
-    from humid_spark.operators.lsh import simhash_pairs
-
-    hashes = image_ahashes(df, blob_col=blob_col, url_col=url_col).filter(
-        F.col("ahash").isNotNull()
-    )
-    return simhash_pairs(
-        hashes, max_bits=max_bits, n_bands=n_bands,
-        id_col="url", sim_col="ahash",
-        band_cap=band_cap, track=track,
-    )

@@ -170,14 +170,14 @@ def simhash_pairs(
     The narrow (doc, fingerprint) projection of `sims` is materialized
     ONCE with an eager localCheckpoint before any fan-out: this operator
     consumes its input from five branches (band sizing, cold self-join
-    x2, hot self-join x2), and every producer feeding it computes the
-    fingerprint with an expensive opaque pass (image/audio decode
-    mapInPandas, the SimHash text UDF) that Spark would otherwise
-    re-execute per branch.  The checkpoint is the guide-§8 lightweight
-    proxy (16 bytes/row regardless of payload width, scale-safe at any
-    corpus size).  With `track`, a release handle for those blocks (and
-    the persisted pruned band membership) is appended for the caller;
-    without `track` the tiny blocks live until session end.
+    x2, hot self-join x2), and its producer, the SimHash text UDF
+    (`signatures.make_simhash_udf`), computes the fingerprint with an
+    opaque Python pass that Spark would otherwise re-execute per branch.
+    The checkpoint is the guide-§8 lightweight proxy (16 bytes/row
+    regardless of payload width, scale-safe at any corpus size).  With
+    `track`, a release handle for those blocks (and the persisted pruned
+    band membership) is appended for the caller; without `track` the tiny
+    blocks live until session end.
     """
     from humid_spark.operators.cc import CheckpointHandle
 

@@ -977,7 +977,7 @@ class DedupIndex:
 
     # ---- maintenance -------------------------------------------------------
 
-    def compact(self, spark: SparkSession, partitions: int | None = None) -> bool:
+    def compact(self, spark: SparkSession) -> bool:
         """Rewrite every committed batch into ONE new base snapshot.
 
         A year of daily snapshots leaves ~365 subdirectories per table —
@@ -995,9 +995,6 @@ class DedupIndex:
         become invisible orphans; reclaim them with `vacuum` once no
         reader holds plans over the old manifest.
 
-        ``partitions`` optionally repartitions the rewrite (uniq on
-        text_hash, bands on (band, bucket)) — sizing the compacted files
-        for the cluster instead of inheriting per-batch parallelism.
         Returns False (no-op) when the index is already a single snapshot.
         """
         if (
@@ -1015,11 +1012,8 @@ class DedupIndex:
             default=0,
         )
         cid = f"compact-{n}"
-        uniq = self.uniq(spark)
-        if partitions:
-            uniq = uniq.repartition(partitions, "text_hash")
         udir = self._batch_dir(self._uniq_dir(self.root), cid)
-        uniq.write.mode("overwrite").parquet(udir)
+        self.uniq(spark).write.mode("overwrite").parquet(udir)
         if self.manifest.get("delete_rows"):
             # the band table is tombstone-PERMISSIVE at read time, so the
             # fold must re-derive it from the filtered uniq (reading the
@@ -1032,8 +1026,6 @@ class DedupIndex:
             )
         else:
             bands = self.bands(spark)
-        if partitions:
-            bands = bands.repartition(partitions, "band", "bucket")
         bands.write.mode("overwrite").parquet(
             self._batch_dir(self._bands_dir(self.root), cid)
         )
@@ -1041,10 +1033,7 @@ class DedupIndex:
             # fold the remaps in: the rewritten map is fully resolved, so
             # the remap table resets to empty (version bump orphans the
             # old directory; no new one is written)
-            clusters = self.clusters(spark)
-            if partitions:
-                clusters = clusters.repartition(partitions, "doc_id")
-            clusters.write.mode("overwrite").parquet(
+            self.clusters(spark).write.mode("overwrite").parquet(
                 self._batch_dir(self._clusters_dir(self.root), cid)
             )
             if self.manifest.get("remap_rows"):
@@ -1120,16 +1109,17 @@ class DedupIndex:
         )
 
     def bands(self, spark: SparkSession) -> DataFrame:
-        """The (doc_id, band, bucket) secondary index; derived on the fly
-        when the band table is absent (back-compat / manual deletion).
-        Deliberately PERMISSIVE of tombstones (`delete`): band rows are
-        candidate hints, and a candidate whose uniq row is gone dies at
-        the verify inner join — compact() drops the rows physically."""
-        if os.path.exists(self._bands_dir(self.root)):
-            return spark.read.schema(self._BANDS_SCHEMA).parquet(
-                *self._committed(self._bands_dir(self.root))
-            )
-        return lsh.band_buckets(self.uniq(spark), self.cfg)
+        """The (doc_id, band, bucket) secondary index, read from the
+        committed band directories.  `build`, `append` and `compact` write
+        a batch's band table before the manifest commit that lists it, so
+        a missing band directory is corruption and fails loudly when read,
+        as a missing live remap or tombstone table does.  Deliberately
+        PERMISSIVE of tombstones (`delete`): band rows are candidate
+        hints, and a candidate whose uniq row is gone dies at the verify
+        inner join — compact() drops the rows physically."""
+        return spark.read.schema(self._BANDS_SCHEMA).parquet(
+            *self._committed(self._bands_dir(self.root))
+        )
 
     # ---- internals -------------------------------------------------------
 
