@@ -164,8 +164,11 @@ def get_spark(
         # every repeated pass evicted and recompiled its own classes
         # (0.6-1.0 s of Janino time per pass plus JIT warm-up on 4 vCPUs).
         # 1000 holds both workloads' sets with room for the
-        # delete/compact/read plans
+        # delete/compact/read plans.  Class names leave out the stage id:
+        # with it, identical code under a stage AQE numbered differently
+        # is a new cache key and compiles again
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
